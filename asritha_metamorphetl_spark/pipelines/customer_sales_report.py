@@ -58,11 +58,12 @@ def customer_sales_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # attributes (p_name/p_type, c_name, nation) are attached AFTER the
     # heavy shuffles so the window exchange moves keys+numbers, not
     # strings (a 100 TB frame shuffles its widest column set — keep it
-    # minimal through every Exchange).
-    sq_part = sq_node(
-        cat.load(spark, "part"), "SQ_products", ["p_partkey", "p_retailprice"]
-    )
-    sq_customer = sq_node(cat.load(spark, "customer"), "SQ_customers", ["c_custkey"])
+    # minimal through every Exchange). Each table is loaded once (a load
+    # costs a schema-inference job) and feeds both projections.
+    part = cat.load(spark, "part")
+    customer = cat.load(spark, "customer")
+    sq_part = sq_node(part, "SQ_products", ["p_partkey", "p_retailprice"])
+    sq_customer = sq_node(customer, "SQ_customers", ["c_custkey"])
 
     fil_orders = fil_node(
         sq_orders, "FIL_sales_data", F.col("o_orderstatus").isin(*ACTIVE_STATUSES)
@@ -170,14 +171,14 @@ def customer_sales_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no static hint: part/customer scale with the data), so no further
     # pre-window Exchange sees the string columns.
     part_attrs = sq_node(
-        cat.load(spark, "part"), "SQ_product_attrs", ["p_partkey", "p_name", "p_type"]
+        part, "SQ_product_attrs", ["p_partkey", "p_name", "p_type"]
     )
     sq_nation = sq_node(
         cat.load(spark, "nation"), "SQ_nation", ["n_nationkey", "n_name"]
     )
     customer_attrs = jnr_node(
         sq_node(
-            cat.load(spark, "customer"),
+            customer,
             "SQ_customer_attrs",
             ["c_custkey", "c_name", "c_nationkey"],
         ).withColumnRenamed("c_custkey", "ca_custkey"),

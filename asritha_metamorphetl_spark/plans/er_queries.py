@@ -241,11 +241,13 @@ def fellegi_sunter_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a deterministic salt = pmod(key, S); the dirty side is exploded S
     # ways, so every (clean, dirty) block pair still meets exactly once
     # — on the clean row's salt. S scales with the session's
-    # parallelism, and the SHUFFLE_HASH hint keeps the join a salted
+    # parallelism up to 64 (the dirty side grows S-fold, so an
+    # uncapped S on a wide cluster would multiply it by the core
+    # count), and the SHUFFLE_HASH hint keeps the join a salted
     # shuffle even where the exploded side's size estimate would allow
     # a broadcast (a broadcast would serialize pair generation onto the
     # clean side's few scan tasks — the skew this change removes).
-    n_salts = max(int(spark.sparkContext.defaultParallelism), 8)
+    n_salts = min(max(int(spark.sparkContext.defaultParallelism), 8), 64)
     clean_s = clean.withColumn(
         "__salt", F.pmod(F.col("key"), F.lit(n_salts)).cast("int")
     )

@@ -470,9 +470,9 @@ class MergeOnReadTable:
         # ``stats`` lets a caller that ALREADY materialized this
         # table-version's delete_stats (the compaction profile pins the
         # pre-state before mutating) hand it in instead of paying the
-        # base+deletes scan again (r14). Caller contract: the frame
-        # must be delete_stats() of the CURRENT version — any commit in
-        # between voids it.
+        # base+deletes scan again (r14). It must be delete_stats() of
+        # the CURRENT version; hot ids the manifest no longer lists
+        # prove a commit came in between, and are refused below.
         if stats is None:
             stats = self.delete_stats()
         stats = stats.filter(
@@ -480,6 +480,12 @@ class MergeOnReadTable:
             & (F.col("n_deleted") > 0)
         )
         hot = [int(r["_file"]) for r in stats.select("_file").collect()]
+        stale = sorted(set(hot) - {int(fid) for fid in manifest["gen_dirs"]})
+        if stale:
+            raise ValueError(
+                f"compact(stats=...): file ids {stale} are not in the current "
+                "manifest; the stats frame is from an older table version"
+            )
         if not hot:
             return []
         dels = self._delete_rows(manifest).distinct()

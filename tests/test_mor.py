@@ -121,6 +121,21 @@ def test_compact_with_precomputed_stats_matches_plain(spark, tmp_path):
     assert pend_a == pend_b
 
 
+def test_compact_refuses_stats_from_an_older_version(spark, tmp_path):
+    """A commit between delete_stats() and compact(stats=...) voids the
+    stats: here a compaction drops the fully-deleted file 0, and the
+    stale frame still names it as hot."""
+    t = _mk(spark, tmp_path, n=100, n_files=4)
+    t.delete_keys(
+        spark.createDataFrame([(k,) for k in range(0, 100, 4)], "k long")
+    )
+    pre = t.delete_stats().localCheckpoint()
+    assert t.compact(min_delete_ratio=0.5) == [0]
+    with pytest.raises(ValueError, match=r"file ids \[0\]"):
+        t.compact(min_delete_ratio=0.5, stats=pre)
+    assert t.read().count() == 75
+
+
 def test_compact_below_threshold_is_noop(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.delete_keys(spark.createDataFrame([(1,)], "k long"))

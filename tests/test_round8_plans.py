@@ -31,6 +31,23 @@ def test_fellegi_sunter_blocking_is_equi_join(spark):
     plan = _plan(_q(spark, "fellegi_sunter_links"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # the dirty side is exploded once per salt; the salt count follows
+    # the session's parallelism but never past 64
+    assert 8 <= _n_salts(plan) <= 64
+
+
+def test_fellegi_sunter_salt_count_is_capped(spark, monkeypatch):
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1000))
+    assert _n_salts(_plan(_q(spark, "fellegi_sunter_links"))) == 64
+
+
+def _n_salts(plan: str) -> int:
+    import re
+
+    (salts,) = re.findall(r"explode\(\[([\d,]+)\]\)", plan)
+    return len(salts.split(","))
 
 
 def test_copurchase_pairs_are_order_local(spark):
