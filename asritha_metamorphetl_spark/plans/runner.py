@@ -108,7 +108,9 @@ class Pipeline:
 
         All bookkeeping stays on the calling thread: DataFrame results
         consumed by >1 downstream node are cached before any consumer
-        starts and unpersisted when their last consumer finishes.
+        starts and unpersisted when their last consumer finishes. Like
+        any cached frame in the session, a fan-out cache is partitioned
+        by AQE to its size, not to ``spark.sql.shuffle.partitions``.
 
         Each body runs under ``setJobGroup(node.name, ...)`` on its
         worker thread, so ``statusTracker().getJobIdsForGroup(name)``

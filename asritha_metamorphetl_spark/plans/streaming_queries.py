@@ -61,6 +61,23 @@ def _overlap(*jobs, workers: int = 3) -> None:
         for fut in [pool.submit(job) for job in jobs]:
             fut.result()
 
+
+def _land_batch(df: DataFrame, path: str, index: int) -> None:
+    """Land ``df`` as ONE parquet file under ``path`` for a
+    ``maxFilesPerTrigger=1`` stream, then pin the directory's and its
+    files' modification times to ``1000 * (index + 1)`` seconds.
+    FileStreamSource delivers files in mtime order, so batch ``index``
+    is the ``index``-th micro-batch however concurrent landings
+    (``_overlap``) interleave their commits."""
+    import os
+
+    df.coalesce(1).write.parquet(path)
+    pinned = (1000 * (index + 1),) * 2
+    for name in os.listdir(path):
+        os.utime(os.path.join(path, name), pinned)
+    os.utime(path, pinned)
+
+
 #: Serializes _parity_suite entries (see its build-session note).
 import threading as _threading
 
@@ -446,11 +463,9 @@ def _cdc_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         batches = _seq_band_batches(changelog)
 
         # three independent band writes off the pinned changelog —
-        # overlap them (r14, §2.6)
+        # overlap them (r14, §2.6); _land_batch keeps the band order
         def _land(i: int, b: DataFrame):
-            return lambda: b.coalesce(1).write.parquet(
-                os.path.join(src, f"band{i}")
-            )
+            return lambda: _land_batch(b, os.path.join(src, f"band{i}"), i)
 
         _overlap(*[_land(i, b) for i, b in enumerate(batches)])
         schema = batches[0].schema
@@ -961,9 +976,11 @@ def _gram_state_fixture(spark: SparkSession, sf_dir: str) -> str:
         # seed moments + the three delta landings: four independent
         # write jobs — overlap them (r14, §2.6)
         def _land(i: int):
-            return lambda: delta.filter(
-                F.col("vec_id") % 3 == i
-            ).coalesce(1).write.parquet(os.path.join(src, f"batch{i}"))
+            return lambda: _land_batch(
+                delta.filter(F.col("vec_id") % 3 == i),
+                os.path.join(src, f"batch{i}"),
+                i,
+            )
 
         _overlap(
             lambda: gram_moments(base, "embedding", EMB_DIM)
@@ -1073,9 +1090,11 @@ def _hll_state_fixture(spark: SparkSession, sf_dir: str) -> str:
         # seed registers + the three delta landings are four independent
         # write jobs into private paths — overlap them (r14, §2.6)
         def _land(i: int):
-            return lambda: delta.filter(
-                F.col("l_orderkey") % 3 == i
-            ).coalesce(1).write.parquet(os.path.join(src, f"batch{i}"))
+            return lambda: _land_batch(
+                delta.filter(F.col("l_orderkey") % 3 == i),
+                os.path.join(src, f"batch{i}"),
+                i,
+            )
 
         _overlap(
             lambda: hll_registers(base, "l_orderkey", ("l_returnflag",))
@@ -1201,9 +1220,9 @@ def _mor_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         # independent — overlap them (r14, §2.6).
         _overlap(
             _copy_base,
-            lambda: d1.coalesce(1).write.parquet(os.path.join(src, "b0")),
-            lambda: d2.coalesce(1).write.parquet(os.path.join(src, "b1")),
-            lambda: d1.coalesce(1).write.parquet(os.path.join(src, "b2")),
+            lambda: _land_batch(d1, os.path.join(src, "b0"), 0),
+            lambda: _land_batch(d2, os.path.join(src, "b1"), 1),
+            lambda: _land_batch(d1, os.path.join(src, "b2"), 2),
         )
         t = MergeOnReadTable(
             spark, tbl_root, "o_orderkey", n_files=pristine.n_files
@@ -1343,10 +1362,10 @@ def _events_lastvalue_fixture(spark: SparkSession, sf_dir: str) -> str:
             .drop("_rn")
             .coalesce(1)
             .write.parquet(os.path.join(rf_state, "batch_id=-1")),
-            lambda: d0.coalesce(1).write.parquet(os.path.join(src, "b0")),
-            lambda: d1.coalesce(1).write.parquet(os.path.join(src, "b1")),
+            lambda: _land_batch(d0, os.path.join(src, "b0"), 0),
+            lambda: _land_batch(d1, os.path.join(src, "b1"), 1),
             # re-delivery
-            lambda: d0.coalesce(1).write.parquet(os.path.join(src, "b2")),
+            lambda: _land_batch(d0, os.path.join(src, "b2"), 2),
         )
 
         def run_semiadd_stream() -> None:
@@ -1831,21 +1850,10 @@ def _wmdrop_state_fixture(spark: SparkSession, sf_dir: str) -> str:
             ev.filter(us >= c2),  # the newest data closes the run
         )
         # four independent single-file writes — overlap them (r14,
-        # §2.6); each job pins its OWN files' modification times after
-        # its write completes, so the delivery order FileStreamSource
-        # derives from mtime is identical however the writes interleave
+        # §2.6); _land_batch pins each landing's mtime, so the delivery
+        # order is identical however the writes interleave
         def _land(i: int, b: DataFrame):
-            def job() -> None:
-                d = os.path.join(src, f"b{i}")
-                b.coalesce(1).write.parquet(d)
-                # FileStreamSource orders by modification time: pin it
-                # so maxFilesPerTrigger=1 delivers exactly this batch
-                # order
-                for f in os.listdir(d):
-                    os.utime(os.path.join(d, f), (1000 * (i + 1),) * 2)
-                os.utime(d, (1000 * (i + 1),) * 2)
-
-            return job
+            return lambda: _land_batch(b, os.path.join(src, f"b{i}"), i)
 
         _overlap(*[_land(i, b) for i, b in enumerate(batches)])
 

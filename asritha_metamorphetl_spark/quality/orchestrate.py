@@ -21,6 +21,10 @@ Differences from the reference, each deliberate:
 At scale the whole run is one shuffle (the full-outer join on the key)
 plus bounded driver-side renders: summary/report frames are capped rows,
 artifact writes stream from the persisted diff without recomputation.
+The persisted diff's partition count follows its size (AQE coalesces
+cached plans, see ``session``), not ``spark.sql.shuffle.partitions``, so
+each artifact is written as that many part files and each report read
+runs that many tasks.
 """
 
 from __future__ import annotations

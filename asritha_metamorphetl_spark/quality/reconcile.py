@@ -21,6 +21,10 @@ transform+explode column zip (:581-606)        arrays_zip + explode (same HOF
 
 Everything is keyed by the primary key — joins shuffle on it, so the diff
 partitions cleanly at any scale; no global windows, no driver-side loops.
+The persisted diff's partition count follows its size, not
+``spark.sql.shuffle.partitions``: the session lets AQE coalesce cached
+plans (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``),
+and no output below is keyed on the join key, so none re-shuffles it.
 """
 
 from __future__ import annotations
@@ -98,7 +102,9 @@ def reconcile(
     ``True`` distinguishes them. ``persist=True`` caches the diff frame
     for callers that consume several result frames (call
     ``result.unpersist()`` when done); pass False for single-result use
-    so nothing lingers in the cache.
+    so nothing lingers in the cache. The cached diff is sized by AQE:
+    a small diff is a few partitions, not ``spark.sql.shuffle.partitions``,
+    so each read of it runs that few tasks.
     """
     keys = list(keys)
     if compare_columns is None:

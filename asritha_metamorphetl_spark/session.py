@@ -13,10 +13,17 @@ broadcast threshold keeps dimension joins shuffle-free, and
 
 from __future__ import annotations
 
+import os as _os
 import threading as _threading
 from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
+
+#: The directory holding this package, which Python workers need on
+#: their path to unpickle UDFs that reference it.
+_PACKAGE_PARENT = _os.path.dirname(
+    _os.path.dirname(_os.path.abspath(__file__))
+)
 
 #: Per-fixture-root build locks (see cached_fixture): setdefault on a
 #: dict is atomic under the GIL, so two threads always share one lock.
@@ -55,6 +62,17 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE size cached/persisted frames too. Spark's default (false)
+    # keeps a cached plan's shuffle partitioning, so a persisted diff of
+    # a few MB stays spark.sql.shuffle.partitions near-empty partitions
+    # and every read of it (each count, filter, write) runs that many
+    # tasks and writes that many part files. No cached frame in this
+    # package is read by a consumer keyed on its partitioning (they
+    # aggregate, filter, explode or write it), and a coalesced read
+    # still reports its hash partitioning, so no Exchange is added
+    # back. At 100 TB a cached frame keeps size-based partition counts,
+    # exactly like every uncached query and localCheckpoint pin.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Dimension tables under this size broadcast instead of shuffling.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # Arrow for pandas_udf / toPandas interchange (vector ops, reports).
@@ -102,8 +120,13 @@ def merged_conf(
     ``spark.hadoop.`` so filesystem-scheme settings (``fs.gs.impl``,
     auth keyfiles, S3A endpoints) pass through the builder — making a
     cloud bucket deploy config-only, no code change. Explicit ``conf``
-    keys win over everything."""
+    keys win over everything.
+
+    Python workers get the package's parent directory on their
+    ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so UDF tasks that
+    import the package work whatever the working directory is."""
     merged = dict(_DEFAULT_CONF)
+    merged["spark.executorEnv.PYTHONPATH"] = _PACKAGE_PARENT
     if shuffle_partitions is not None:
         merged["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if jars:

@@ -124,6 +124,74 @@ def test_merged_conf_wires_cloud_connectors():
     assert out["spark.sql.shuffle.partitions"] == "64"
     # engine defaults survive the merge
     assert out["spark.sql.adaptive.enabled"] == "true"
+    assert (
+        out["spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"]
+        == "true"
+    )
+
+
+def test_merged_conf_ships_package_path_to_workers():
+    """Python workers find the package through executor PYTHONPATH by
+    default; an explicit conf value still wins."""
+    import os
+
+    import asritha_metamorphetl_spark
+    from asritha_metamorphetl_spark.session import merged_conf
+
+    parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(asritha_metamorphetl_spark.__file__))
+    )
+    assert merged_conf()["spark.executorEnv.PYTHONPATH"] == parent
+    out = merged_conf(conf={"spark.executorEnv.PYTHONPATH": "/elsewhere"})
+    assert out["spark.executorEnv.PYTHONPATH"] == "/elsewhere"
+
+
+_UDF_IMPORTS_PACKAGE = """
+import sys
+sys.path.insert(0, {repo!r})  # this process only; workers do not see it
+from pyspark.sql import functions as F
+from asritha_metamorphetl_spark.session import create_session
+
+spark = create_session(
+    master="local[1]", shuffle_partitions=1,
+    conf={{"spark.driver.memory": "1g"}},
+)
+
+
+@F.udf("string")
+def from_package(x):
+    import asritha_metamorphetl_spark.schema as schema
+
+    return schema.__name__
+
+
+print("ROWS", [r[0] for r in spark.range(2).select(from_package("id")).collect()])
+spark.stop()
+"""
+
+
+def test_udf_importing_package_runs_outside_repo_cwd(tmp_path):
+    """A UDF that imports the package works from any working directory
+    with no PYTHONPATH set: create_session ships the package's parent
+    directory to the workers."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_ROOT
+
+    script = tmp_path / "udf_probe.py"
+    script.write_text(_UDF_IMPORTS_PACKAGE.format(repo=REPO_ROOT))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert (
+        "ROWS ['asritha_metamorphetl_spark.schema', "
+        "'asritha_metamorphetl_spark.schema']" in proc.stdout
+    )
 
 
 def test_create_session_applies_merged_conf(spark):

@@ -140,6 +140,41 @@ def test_csv_ingestion_end_to_end(spark, tmp_path):
     out.unpersist()
 
 
+def test_ingest_writes_join_the_callers_job_group(spark, tmp_path):
+    """The raw and legacy writes run on ingest_entity's own pool; they
+    inherit the calling thread's job group (Pipeline's node name), so
+    none of the ingest's jobs is left without a group."""
+    from asritha_metamorphetl_spark.pipelines.ingestion import Warehouse, ingest_entity
+    from asritha_metamorphetl_spark.schema import PRIMARY_KEYS, SUPPLIERS
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    feed = spark.createDataFrame(
+        [("S1", "A", "1", "East"), ("S2", "B", "2", "West")], SUPPLIERS
+    )
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "ingest job-group probe")
+    try:
+        out = ingest_entity(
+            feed, Warehouse(str(tmp_path / "wh")), "suppliers",
+            SUPPLIERS, PRIMARY_KEYS["suppliers"],
+            day=datetime.date(2026, 8, 13),
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = tracker.getJobIdsForGroup("g")
+    write_jobs = [
+        j for j in grouped
+        if any(
+            tracker.getStageInfo(s).name.startswith("parquet at")
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+    assert len(write_jobs) == 2, grouped
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    out.unpersist()
+
+
 def test_ingestion_rejects_duplicate_pk(spark, tmp_path):
     from asritha_metamorphetl_spark.pipelines.ingestion import Warehouse, ingest_entity
     from asritha_metamorphetl_spark.quality import DuplicateKeyError

@@ -204,3 +204,21 @@ def test_parity_suite_memoizes_failed_family_builds(spark, monkeypatch):
         "/tmp/suite_memo_root"
     )
     assert calls["bad"] == 1
+
+
+def test_stream_fixture_landings_are_mtime_pinned_in_batch_order(spark):
+    """FileStreamSource delivers files in modification-time order, and
+    the fixtures land their batches concurrently (``_overlap``). Each
+    landing's directory and files carry the per-index pinned mtime
+    (``1000 * (index + 1)`` seconds), so the micro-batch order is the
+    batch index, not the commit race."""
+    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
+    from tests.conftest import SF_SMOKE
+
+    root = SQ._hll_state_fixture(spark, SF_SMOKE)
+    for i in range(3):
+        d = os.path.join(root, "delta", f"batch{i}")
+        paths = [d] + [os.path.join(d, f) for f in os.listdir(d)]
+        assert any(p.endswith(".parquet") for p in paths)
+        for p in paths:
+            assert os.stat(p).st_mtime == 1000 * (i + 1), p

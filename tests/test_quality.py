@@ -157,6 +157,48 @@ def test_submit_reconciliation_end_to_end(spark, tmp_path):
     run.unpersist()
 
 
+def test_persisted_diff_is_sized_by_aqe(spark, tmp_path):
+    """The persisted diff is coalesced to its size, not kept at
+    spark.sql.shuffle.partitions: a small diff reads back as few tasks
+    and each artifact is written as one part file."""
+    import datetime
+    import os
+
+    from asritha_metamorphetl_spark.quality import (
+        ReconcileRequest,
+        submit_reconciliation,
+    )
+
+    src = spark.range(1000).select(
+        F.col("id").cast("int").alias("id"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+    )
+    src.write.parquet(str(tmp_path / "src"))
+    # every key perturbed: 1000 mismatched rows
+    src.withColumn("v", F.concat("v", F.lit("x"))).write.parquet(
+        str(tmp_path / "tgt")
+    )
+    run = submit_reconciliation(
+        spark,
+        ReconcileRequest(
+            source={"type": "parquet", "path": str(tmp_path / "src")},
+            target={"type": "parquet", "path": str(tmp_path / "tgt")},
+            keys=["id"],
+            artifact_root=str(tmp_path / "artifacts"),
+            run_date=datetime.date(2026, 8, 13),
+        ),
+    )
+    assert run.result.summary.collect()[0].mismatched_rows == 1000
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert run.result.diff.rdd.getNumPartitions() < shuffle_partitions
+    parts = [
+        f for f in os.listdir(run.artifact_paths["column_mismatches"])
+        if f.startswith("part-")
+    ]
+    assert len(parts) == 1, parts
+    run.unpersist()
+
+
 def test_embedding_near_dup_pairs_blocked_vs_unblocked(spark):
     """Blocked pair generation must equal the all-pairs result when the
     block key is constant, and never cross blocks otherwise."""
