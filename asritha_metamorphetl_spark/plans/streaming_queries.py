@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from asritha_metamorphetl_spark.functions.numeric import exact_sum
+from asritha_metamorphetl_spark.plans.fixtures import _prewarm
 from asritha_metamorphetl_spark.plans.registry import register
 from asritha_metamorphetl_spark.sources.files import Catalog
 from asritha_metamorphetl_spark.streaming.windows import (
@@ -47,14 +48,7 @@ def _overlap(*jobs, workers: int = 3) -> None:
     seed phase costs max(job) instead of sum(job). ONLY for jobs with
     no ordering dependency (each writes its own directory); fold
     sequences and micro-batch counts are pinned semantics and never go
-    through here. ``METAMORPH_SEQ_SEED_WRITES=1`` forces sequential
-    execution — the A/B control used to measure this change."""
-    import os as _os
-
-    if _os.environ.get("METAMORPH_SEQ_SEED_WRITES"):
-        for job in jobs:
-            job()
-        return
+    through here."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(workers, len(jobs))) as pool:
@@ -76,23 +70,6 @@ def _land_batch(df: DataFrame, path: str, index: int) -> None:
     for name in os.listdir(path):
         os.utime(os.path.join(path, name), pinned)
     os.utime(path, pinned)
-
-
-#: Serializes _parity_suite entries (see its build-session note).
-import threading as _threading
-
-_SUITE_LOCK = _threading.Lock()
-
-#: Families whose build RAISED in this process, keyed by
-#: ``(applicationId, family)`` (ADVICE r12: without the memo a
-#: persistently-broken family is rebuilt from scratch by every suite
-#: consumer — ~15 parity queries × the failed build's wall-clock). The
-#: stored exception is re-raised cheaply for that family's own
-#: consumers; other families skip resubmitting it. Keyed by
-#: applicationId so a FRESH session (new scratch roots, possibly fixed
-#: environment) retries the build from scratch, matching
-#: ``cached_fixture``'s no-marker-on-failure retry semantics.
-_SUITE_FAILURES: dict[tuple[str, str], BaseException] = {}
 
 
 def _materialize(
@@ -681,48 +658,16 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _parity_suite(spark: SparkSession, sf_dir: str, family: str) -> str:
-    """Prewarm EVERY file-fold streaming-parity fixture CONCURRENTLY and
-    return the requested family's root (VERDICT r11 directive #1: the
-    fixture families — docs trilogy, events last-value pair, gram
-    moments, HLL registers, MoR deletes, bucketed CDC, plus round 12's
-    inverted-arrival folds and the watermark-drop stream — are
-    independent jobs over different tables whose builds ran strictly
-    sequentially, so the bench paid sum(families) where max(family)
-    suffices; local[32] has headroom for the concurrent
-    AvailableNow micro-batch runs). Each family keeps its own
+    """The root of streaming-parity fixture ``family``, built with EVERY
+    file-fold parity family concurrently on first touch (``_prewarm``;
+    VERDICT r11 directive #1): docs trilogy, events last-value pair,
+    gram moments, HLL registers, MoR deletes, bucketed CDC, the
+    inverted-arrival folds and the watermark-drop stream are independent
+    jobs over different tables. Each family keeps its own
     ``cached_fixture`` label, checkpoint, and UNCHANGED fold sequence —
     concurrency only overlaps wall-clock across families, it cannot
     interleave work within one (every state dir is family-private), so
-    each parity's oracle hash still certifies its own fold exactly as
-    before.
-
-    Fault isolation: only THIS query's family may raise here; another
-    family's failed build is swallowed (no ``_FIXTURE_READY`` marker is
-    written on failure) and surfaces in its own consumers. A failure is
-    memoized per ``(applicationId, family)`` in ``_SUITE_FAILURES`` so
-    later suite entries re-raise it cheaply instead of rebuilding the
-    broken family once per consumer (ADVICE r12)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    # LONGEST-FIRST submission order (measured isolated build seconds;
-    # the classic makespan heuristic): with a bounded pool the slowest
-    # family must start first or it becomes the tail all by itself.
-    families = {
-        "trilogy": _docs_trilogy_fixture,
-        "hll": _hll_state_fixture,
-        "lastvalue": _events_lastvalue_fixture,
-        "latebatch": _latebatch_state_fixture,
-        "mor": _mor_stream_fixture,
-        "cdc": _cdc_stream_fixture,
-        "gram": _gram_state_fixture,
-        "wmdrop": _wmdrop_state_fixture,
-    }
-    if family not in families:
-        raise KeyError(f"unknown parity-suite family {family!r}")
-    app = spark.sparkContext.applicationId
-    memo = _SUITE_FAILURES.get((app, family))
-    if memo is not None:
-        raise memo
+    each parity's oracle hash still certifies its own fold exactly."""
     # Micro-batch folds move KB-to-MB frames; at the session's 32
     # shuffle partitions every tiny distinct/agg/topk inside a fold
     # spawns 32 tasks and fixed per-task overhead dominates (profiled:
@@ -740,42 +685,22 @@ def _parity_suite(spark: SparkSession, sf_dir: str, family: str) -> str:
     # join shuffled the corpus-sized band table per batch; the fold now
     # broadcasts the batch side (no shuffle), which is what makes the
     # low setting safe for the builds.
-    # One suite entry at a time: serialization costs nothing — the
-    # second caller enters after the first built everything and every
-    # cached_fixture returns on its marker instantly.
-    # max_workers=3, NOT one per family (guide §2.6: "2-3 jobs in
-    # flight is plenty: enough to fill the tail, not so many that they
-    # fight"). Each family build is itself a driver-heavy pipeline —
-    # micro-batch planning, checkpoint commits, foreachBatch Python
-    # folds — so 8 concurrent builds fight for the driver (GIL + py4j)
-    # and the filesystem more than they use the 32 cores. Measured on
-    # the full suite at sf0.1 (same container, back-to-back):
-    # 8 workers = 50.2 s wall, 4 = 32.6, 3/2 = 28.9-39.7, 1 = 50.1
-    # (sequential sum) — the bounded pool roughly HALVES the wall and
-    # every family's own build seconds drop 2-4x (trilogy 50.2 -> 11.5
-    # thread-seconds at 2 workers). Three keeps slack for one slow
-    # family without re-creating the pile-up.
-    with _SUITE_LOCK:
-        build_spark = spark.newSession()
-        build_spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = {
-                k: pool.submit(fn, build_spark, sf_dir)
-                for k, fn in families.items()
-                if (app, k) not in _SUITE_FAILURES
-            }
-    root = None
-    for k, fut in futs.items():
-        exc = fut.exception()  # consume: non-requested failures are
-        if exc is not None:  # memoized, not raised here
-            _SUITE_FAILURES[(app, k)] = exc
-        elif k == family:
-            root = fut.result()
-    if family not in futs:  # memoized as failed by a concurrent entry
-        raise _SUITE_FAILURES[(app, family)]
-    if root is None:
-        raise _SUITE_FAILURES[(app, family)]
-    return root
+    build_spark = spark.newSession()
+    build_spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # LONGEST-FIRST submission order (measured isolated build seconds;
+    # the classic makespan heuristic): with a bounded pool the slowest
+    # family must start first or it becomes the tail all by itself.
+    families = {
+        "trilogy": _docs_trilogy_fixture,
+        "hll": _hll_state_fixture,
+        "lastvalue": _events_lastvalue_fixture,
+        "latebatch": _latebatch_state_fixture,
+        "mor": _mor_stream_fixture,
+        "cdc": _cdc_stream_fixture,
+        "gram": _gram_state_fixture,
+        "wmdrop": _wmdrop_state_fixture,
+    }
+    return _prewarm(build_spark, sf_dir, families, family)
 
 
 @register("streaming_ingest_dedup_parity", oracle=_ingest_dedup_oracle())

@@ -40,8 +40,8 @@ _FIXTURE_LOCKS: dict[str, _threading.Lock] = {}
 #: SEQUENTIAL-ONLY contract (ADVICE r12): these are unsynchronized
 #: module globals, sized for the one consumer that needs them — the
 #: sequential bench loop. Under a concurrent sweep (``--jobs N``, or
-#: the parity suite's own build threads triggering nested
-#: ``cached_fixture`` calls) ``charged_to`` may be ``None`` or name
+#: the suite build threads triggering nested ``cached_fixture``
+#: calls) ``charged_to`` may be ``None`` or name
 #: whichever query's thread last set it — LOG-ONLY noise, never a
 #: correctness input. Threading a consumer name through every
 #: ``cached_fixture`` call would tax each call site for a label only

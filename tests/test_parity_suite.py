@@ -1,16 +1,20 @@
-"""Machinery tests for the concurrent streaming-parity fixture suite
-(round 12, VERDICT r11 directive #1; round 13, VERDICT r12 #5) and the
+"""Machinery tests for the shared-fixture suites (``plans.fixtures
+._prewarm``: the streaming parity suite and the dedup/ANN suite) and the
 fixture-build attribution log — the orchestration contracts the oracle
 hashes cannot see:
 
-- the suite's low shuffle-partition knob is scoped to a PRIVATE build
-  session: the caller's session conf is never mutated, so a concurrent
-  non-suite query observes the session's own partition count mid-build;
 - only the REQUESTED family's failure propagates (fault isolation),
-  and a failed family's build is memoized per session so later suite
-  entries re-raise cheaply instead of rebuilding it per consumer;
+  and a failed family is built once per (session, sf): later consumers
+  get the original exception cheaply instead of rebuilding it, while
+  the same family at another scale factor builds afresh;
+- a finished family is served at once, even while its suite builds;
+- a suite call from inside a family build returns at once;
+- the parity suite's low shuffle-partition knob is scoped to a PRIVATE
+  build session: the caller's session conf is never mutated, so a
+  concurrent non-suite query observes the session's own partition
+  count mid-build;
 - a failed build leaves no ``_FIXTURE_READY`` marker, so the next
-  consumer (in a FRESH session — the memo is applicationId-keyed)
+  consumer in a FRESH session (the memo is applicationId-keyed)
   retries it;
 - ``cached_fixture`` records build seconds + the consumer that
   triggered the build in ``FIXTURE_BUILD_LOG`` under the
@@ -21,20 +25,46 @@ from __future__ import annotations
 
 import os
 import threading
+from importlib import import_module
 
 import pytest
 
-#: Every family-builder attribute _parity_suite dispatches to.
-_FAMILY_FNS = (
-    "_docs_trilogy_fixture",
-    "_events_lastvalue_fixture",
-    "_gram_state_fixture",
-    "_hll_state_fixture",
-    "_mor_stream_fixture",
-    "_cdc_stream_fixture",
-    "_latebatch_state_fixture",
-    "_wmdrop_state_fixture",
-)
+#: Per suite: its module, its caller, and {family: builder attribute}
+#: in table order.
+_SUITES = {
+    "parity": ("streaming_queries", "_parity_suite", {
+        "trilogy": "_docs_trilogy_fixture",
+        "hll": "_hll_state_fixture",
+        "lastvalue": "_events_lastvalue_fixture",
+        "latebatch": "_latebatch_state_fixture",
+        "mor": "_mor_stream_fixture",
+        "cdc": "_cdc_stream_fixture",
+        "gram": "_gram_state_fixture",
+        "wmdrop": "_wmdrop_state_fixture",
+    }),
+    "dedup": ("fixtures", "_dedup_suite", {
+        "minhash_labels": "minhash_cluster_labels",
+        "ngram_scored": "ngram_jaccard_scored",
+        "cos_truth": "cosine_truth_topk",
+        "l2_truth": "l2_truth_topk_gated",
+        "semdedup_asg": "semdedup_assignment",
+        "ivf_cent_knn": "ivf_centroids_knn",
+        "pq_books_raw": "pq_codebooks_raw",
+        "pq_books_res": "ivfpq_residual_books",
+    }),
+}
+
+
+def _patch_suite(monkeypatch, suite: str, default, **builders):
+    """Clear the suite memo and point every family of ``suite`` at
+    ``builders[family]`` or ``default``. Returns the suite's caller."""
+    fx = import_module("asritha_metamorphetl_spark.plans.fixtures")
+    monkeypatch.setattr(fx, "_SUITE_BUILDS", {})
+    mod_name, caller, families = _SUITES[suite]
+    mod = import_module(f"asritha_metamorphetl_spark.plans.{mod_name}")
+    for family, attr in families.items():
+        monkeypatch.setattr(mod, attr, builders.get(family, default))
+    return getattr(mod, caller)
 
 
 def test_cached_fixture_logs_build_attribution(spark, tmp_path):
@@ -83,14 +113,32 @@ def test_cached_fixture_failed_build_leaves_no_marker(spark):
     assert os.path.exists(os.path.join(root, "_FIXTURE_READY"))
 
 
-def test_parity_suite_fault_isolation_and_build_session(spark, monkeypatch):
-    """A broken family must not sink another family's consumer, the
-    pinned shuffle-partition setting must live only in the private
-    build session (never the caller's), and the failure MUST propagate
-    to its own consumer."""
-    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
+@pytest.mark.parametrize("suite", sorted(_SUITES))
+def test_suite_fault_isolation(spark, monkeypatch, suite):
+    """A broken family must not sink another family's consumer, and
+    the failure MUST propagate to its own consumer."""
 
-    monkeypatch.setattr(SQ, "_SUITE_FAILURES", {})
+    def bad(spark_, sf_dir):
+        raise RuntimeError("family build exploded")
+
+    fams = list(_SUITES[suite][2])
+    run = _patch_suite(
+        monkeypatch, suite, lambda s, d: "/tmp/suite_good_root",
+        **{fams[-1]: bad},
+    )
+    # another family's consumer succeeds despite the broken family
+    assert run(spark, "/x/sfT", fams[0]) == "/tmp/suite_good_root"
+    # the broken family's own consumer sees the failure
+    with pytest.raises(RuntimeError, match="family build exploded"):
+        run(spark, "/x/sfT", fams[-1])
+    # unknown family is a loud error, not a silent None
+    with pytest.raises(KeyError):
+        run(spark, "/x/sfT", "nope")
+
+
+def test_parity_suite_builds_in_private_session(spark, monkeypatch):
+    """The pinned shuffle-partition setting lives only in the private
+    build session, never the caller's — also when a family fails."""
     built = {}
 
     def good(spark_, sf_dir):
@@ -105,24 +153,15 @@ def test_parity_suite_fault_isolation_and_build_session(spark, monkeypatch):
     def bad(spark_, sf_dir):
         raise RuntimeError("family build exploded")
 
-    for name in _FAMILY_FNS[:-1]:
-        monkeypatch.setattr(SQ, name, good)
-    monkeypatch.setattr(SQ, "_wmdrop_state_fixture", bad)
-
+    run = _patch_suite(monkeypatch, "parity", good, wmdrop=bad)
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    # another family's consumer succeeds despite the broken family
-    root = SQ._parity_suite(spark, "/x/sfT", "trilogy")
-    assert root == "/tmp/suite_good_root"
+    assert run(spark, "/x/sfP", "trilogy") == "/tmp/suite_good_root"
     assert built["partitions_during_build"] == "8"
     assert built["own_session"]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # the broken family's own consumer sees the failure
     with pytest.raises(RuntimeError, match="family build exploded"):
-        SQ._parity_suite(spark, "/x/sfT", "wmdrop")
+        run(spark, "/x/sfP", "wmdrop")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # unknown family is a loud error, not a silent None
-    with pytest.raises(KeyError):
-        SQ._parity_suite(spark, "/x/sfT", "nope")
 
 
 def test_concurrent_nonsuite_query_sees_session_partitions(
@@ -132,9 +171,6 @@ def test_concurrent_nonsuite_query_sees_session_partitions(
     MID-BUILD, a concurrent non-suite query in the caller's session
     observes the session's own shuffle-partition setting (the old
     session-global set/restore pinned it to 8 for the build window)."""
-    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
-
-    monkeypatch.setattr(SQ, "_SUITE_FAILURES", {})
     in_build = threading.Event()
     release = threading.Event()
     seen = {}
@@ -147,13 +183,11 @@ def test_concurrent_nonsuite_query_sees_session_partitions(
         release.wait(timeout=60)
         return "/tmp/suite_slow_root"
 
-    for name in _FAMILY_FNS:
-        monkeypatch.setattr(SQ, name, slow_family)
-
+    run = _patch_suite(monkeypatch, "parity", slow_family)
     before = spark.conf.get("spark.sql.shuffle.partitions")
 
     def run_suite():
-        seen["root"] = SQ._parity_suite(spark, "/x/sfC", "gram")
+        seen["root"] = run(spark, "/x/sfC", "gram")
 
     t = threading.Thread(target=run_suite)
     t.start()
@@ -171,39 +205,172 @@ def test_concurrent_nonsuite_query_sees_session_partitions(
     assert seen["root"] == "/tmp/suite_slow_root"
 
 
-def test_parity_suite_memoizes_failed_family_builds(spark, monkeypatch):
+@pytest.mark.parametrize("suite", sorted(_SUITES))
+def test_suite_memoizes_failed_family_builds(spark, monkeypatch, suite):
     """ADVICE r12: a persistently-broken family is built ONCE per
-    session; later suite entries skip resubmitting it and its own
-    consumers get the memoized exception cheaply."""
-    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
-
-    monkeypatch.setattr(SQ, "_SUITE_FAILURES", {})
+    (session, sf); later consumers of other families never resubmit it
+    and its own consumers get the memoized exception cheaply."""
     calls = {"bad": 0}
-
-    def good(spark_, sf_dir):
-        return "/tmp/suite_memo_root"
 
     def bad(spark_, sf_dir):
         calls["bad"] += 1
         raise RuntimeError("persistently broken")
 
-    for name in _FAMILY_FNS[:-1]:
-        monkeypatch.setattr(SQ, name, good)
-    monkeypatch.setattr(SQ, "_wmdrop_state_fixture", bad)
-
-    assert SQ._parity_suite(spark, "/x/sfM", "trilogy") == (
-        "/tmp/suite_memo_root"
+    fams = list(_SUITES[suite][2])
+    run = _patch_suite(
+        monkeypatch, suite, lambda s, d: "/tmp/suite_memo_root",
+        **{fams[-1]: bad},
     )
+    assert run(spark, "/x/sfM", fams[0]) == "/tmp/suite_memo_root"
     assert calls["bad"] == 1
     # its own consumer: memoized exception, no rebuild
     with pytest.raises(RuntimeError, match="persistently broken"):
-        SQ._parity_suite(spark, "/x/sfM", "wmdrop")
+        run(spark, "/x/sfM", fams[-1])
     assert calls["bad"] == 1
     # another family's consumer: broken family not resubmitted
-    assert SQ._parity_suite(spark, "/x/sfM", "gram") == (
-        "/tmp/suite_memo_root"
-    )
+    assert run(spark, "/x/sfM", fams[1]) == "/tmp/suite_memo_root"
     assert calls["bad"] == 1
+
+
+@pytest.mark.parametrize("suite", sorted(_SUITES))
+def test_suite_failure_memo_is_keyed_by_scale_factor(
+    spark, monkeypatch, suite
+):
+    """A family that failed at one scale factor builds afresh at
+    another in the same session, instead of re-raising the first
+    scale's error."""
+    broken = {"on": True}
+
+    def flaky(spark_, sf_dir):
+        if broken["on"]:
+            raise RuntimeError(f"broken at {sf_dir}")
+        return f"/tmp/root_{os.path.basename(sf_dir)}"
+
+    fams = list(_SUITES[suite][2])
+    run = _patch_suite(
+        monkeypatch, suite, lambda s, d: "/tmp/good", **{fams[-1]: flaky}
+    )
+    with pytest.raises(RuntimeError, match="broken at /x/sfA"):
+        run(spark, "/x/sfA", fams[-1])
+    broken["on"] = False
+    assert run(spark, "/x/sfB", fams[-1]) == "/tmp/root_sfB"
+    # the failed scale keeps its memo until a fresh session
+    with pytest.raises(RuntimeError, match="broken at /x/sfA"):
+        run(spark, "/x/sfA", fams[-1])
+
+
+@pytest.mark.parametrize("suite", sorted(_SUITES))
+def test_finished_family_served_while_suite_builds(
+    spark, monkeypatch, suite
+):
+    """ADVICE r14 #2: while one family still builds, a concurrent
+    consumer of an already-finished family gets its result at once
+    instead of waiting for the whole suite."""
+    release = threading.Event()
+    b_done = threading.Event()
+
+    def slow(spark_, sf_dir):
+        release.wait(timeout=60)
+        return "/tmp/root_a"
+
+    def fast(spark_, sf_dir):
+        b_done.set()
+        return "/tmp/root_b"
+
+    fams = list(_SUITES[suite][2])
+    run = _patch_suite(
+        monkeypatch, suite, lambda s, d: "/tmp/good",
+        **{fams[0]: slow, fams[1]: fast},
+    )
+    seen = {}
+    starter = threading.Thread(
+        target=lambda: seen.update(a=run(spark, "/x/sfW", fams[0]))
+    )
+    consumer = threading.Thread(
+        target=lambda: seen.update(b=run(spark, "/x/sfW", fams[1]))
+    )
+    starter.start()
+    try:
+        assert b_done.wait(timeout=60), "family B never built"
+        consumer.start()
+        consumer.join(timeout=30)
+        served_early = not consumer.is_alive() and "a" not in seen
+    finally:
+        release.set()
+        starter.join(timeout=120)
+    consumer.join(timeout=120)
+    assert served_early, "B's consumer waited for A's build"
+    assert seen == {"a": "/tmp/root_a", "b": "/tmp/root_b"}
+
+
+@pytest.mark.parametrize("suite", sorted(_SUITES))
+def test_suite_call_inside_family_build_returns_at_once(
+    spark, monkeypatch, suite
+):
+    """A chain resolving its dependency calls the suite again from
+    inside a family build; that call returns None at once (the build
+    owns that work) instead of deadlocking on its own suite."""
+    fams = list(_SUITES[suite][2])
+    nested = {}
+
+    def chain(spark_, sf_dir):
+        nested["result"] = run(spark_, sf_dir, fams[1])
+        return "/tmp/chain_root"
+
+    run = _patch_suite(
+        monkeypatch, suite, lambda s, d: "/tmp/good", **{fams[0]: chain}
+    )
+    assert run(spark, "/x/sfN", fams[0]) == "/tmp/chain_root"
+    assert nested == {"result": None}
+
+
+def test_concurrent_first_touches_build_each_family_once(
+    spark, monkeypatch
+):
+    """Many consumers touch one suite at once, at two scale factors,
+    with a short thread switch interval: every family builds exactly
+    once per sf, and every consumer gets its own family's result."""
+    import sys
+
+    counts, lock = {}, threading.Lock()
+
+    def builder(family):
+        def build(spark_, sf_dir):
+            with lock:
+                counts[(sf_dir, family)] = counts.get((sf_dir, family), 0) + 1
+            return f"{sf_dir}/{family}"
+
+        return build
+
+    fams = list(_SUITES["dedup"][2])
+    run = _patch_suite(
+        monkeypatch, "dedup", None, **{f: builder(f) for f in fams}
+    )
+    jobs = [(f"/x/sfS{i // 16}", fams[i % len(fams)]) for i in range(32)]
+    got, errors = {}, []
+
+    def consume(job):
+        try:
+            got[job] = run(spark, *job)
+        except Exception as exc:
+            errors.append(exc)
+
+    threads = [threading.Thread(target=consume, args=(j,)) for j in jobs]
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == {(sf, f): f"{sf}/{f}" for sf, f in jobs}
+    assert counts == {
+        (f"/x/sfS{i}", f): 1 for i in range(2) for f in fams
+    }
 
 
 def test_stream_fixture_landings_are_mtime_pinned_in_batch_order(spark):
