@@ -127,39 +127,26 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # oracle: the driver's compare, one query at a time
-    import hashlib
-
     import duckdb
 
     from asritha_metamorphetl_spark.plans.registry import all_oracles
-    from asritha_metamorphetl_spark.sources.files import TESTDATA_TABLES
+    from asritha_metamorphetl_spark.quality.oracle import compare, register_views
 
     sql = all_oracles().get(args.query)
     if sql is None:
         print(f"{args.query}: no oracle registered (rows-only query)")
         return 0
-    got = fn(spark, args.sf_dir).toPandas()
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
-    want = con.sql(sql).df()
-
-    def vhash(pdf):
-        pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-        lines = sorted("|".join(map(str, r)) for r in pdf.itertuples(index=False))
-        return hashlib.md5("\n".join(lines).encode()).hexdigest()
-
-    ok_rows = len(got) == len(want)
-    ok_cols = sorted(got.columns) == sorted(want.columns)
-    ok_hash = vhash(got) == vhash(want)
+    df = fn(spark, args.sf_dir)
+    con = register_views(duckdb.connect(), args.sf_dir)
+    rec = compare(df.columns, df.collect(), con, sql)
     print(
-        f"{args.query}: rows {len(got)}/{len(want)} match={ok_rows} "
-        f"schema={ok_cols} hash={ok_hash}"
+        f"{args.query}: rows {rec['spark_rows']}/{rec['oracle_rows']} "
+        f"match={rec['rows_match']} schema={rec['schema_match']} "
+        f"hash={rec['hash_match']}"
     )
-    return 0 if (ok_rows and ok_cols and ok_hash) else 1
+    if rec["err"]:
+        print(rec["err"])
+    return 0 if rec["hash_match"] else 1
 
 
 if __name__ == "__main__":

@@ -1,4 +1,5 @@
-"""Shared fixtures: one local SparkSession per test run + oracle comparator."""
+"""Shared fixtures: one local SparkSession and one DuckDB oracle
+connection per test run."""
 
 from __future__ import annotations
 
@@ -27,62 +28,12 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    """DuckDB connection with the testdata tables registered as views,
-    mirroring the driver's oracle setup."""
+    """DuckDB connection with the sf0.01 testdata tables registered as
+    views, mirroring the driver's oracle setup."""
     import duckdb
 
-    from asritha_metamorphetl_spark.sources.files import TESTDATA_TABLES
+    from asritha_metamorphetl_spark.quality.oracle import register_views
 
-    con = duckdb.connect()
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        pass  # views are per-comparison; see compare() below
+    con = register_views(duckdb.connect(), SF_CORRECT)
     yield con
     con.close()
-
-
-def oracle_frame(con, sf_dir: str, sql: str):
-    """Run oracle SQL against parquet views for one scale factor."""
-    from asritha_metamorphetl_spark.sources.files import TESTDATA_TABLES
-
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con.sql(sql).df()
-
-
-def canonical(df_pandas):
-    """Order-insensitive canonical form: sort columns by name, then rows."""
-    import pandas as pd
-
-    out = df_pandas.reindex(sorted(df_pandas.columns), axis=1).copy()
-    for c in out.columns:
-        if out[c].dtype == object:
-            out[c] = out[c].astype(str)
-    out = out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
-    return out
-
-
-def assert_matches_oracle(spark, con, query_fn, sql: str, sf_dir: str = SF_CORRECT):
-    """Driver-equivalent check: row count + column names + exact values."""
-    import pandas as pd
-
-    got = canonical(query_fn(spark, sf_dir).toPandas())
-    want = canonical(oracle_frame(con, sf_dir, sql))
-    assert list(got.columns) == list(want.columns), (
-        f"column mismatch: spark={list(got.columns)} oracle={list(want.columns)}"
-    )
-    assert len(got) == len(want), f"row count: spark={len(got)} oracle={len(want)}"
-    for c in got.columns:
-        g, w = got[c], want[c]
-        if g.dtype.kind == "f" or w.dtype.kind == "f":
-            pd.testing.assert_series_equal(
-                g.astype(float), w.astype(float), check_names=False,
-                rtol=0, atol=0, check_exact=True, obj=f"column {c}",
-            )
-        else:
-            pd.testing.assert_series_equal(
-                g.astype(str), w.astype(str), check_names=False, obj=f"column {c}"
-            )

@@ -1,15 +1,15 @@
 """Every registered query must match its DuckDB oracle under the driver's
-comparison semantics (row count + column names + order-insensitive
-stringified value hash). This is the umbrella correctness gate — any new
-@register'd query is automatically picked up."""
+comparison (``quality.oracle.compare``: row count, column names, and an
+order-insensitive sha256 over normalized cells of the collected rows).
+This is the umbrella correctness gate — any new @register'd query is
+automatically picked up; a query without an oracle is only collected."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 
-from tests.conftest import SF_CORRECT, oracle_frame
+from asritha_metamorphetl_spark.quality.oracle import compare, diff_sample
+from tests.conftest import SF_CORRECT
 
 
 def _names():
@@ -18,41 +18,19 @@ def _names():
     return sorted(all_queries())
 
 
-def _vhash(pdf):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    lines = sorted("|".join(map(str, r)) for r in pdf.itertuples(index=False))
-    return hashlib.md5("\n".join(lines).encode()).hexdigest()
-
-
 @pytest.mark.parametrize("name", _names())
 def test_query_matches_oracle(name, spark, duck):
     from asritha_metamorphetl_spark.plans.registry import all_oracles, all_queries
 
-    fn = all_queries()[name]
-    oracles = all_oracles()
-    got = fn(spark, SF_CORRECT).toPandas()
-    if name not in oracles:
-        assert len(got) >= 0  # rows-only check for non-SQL-expressible ops
-        return
-    want = oracle_frame(duck, SF_CORRECT, oracles[name])
-    assert sorted(got.columns) == sorted(want.columns), (
-        f"columns: spark={sorted(got.columns)} oracle={sorted(want.columns)}"
+    df = all_queries()[name](spark, SF_CORRECT)
+    rows = df.collect()
+    sql = all_oracles().get(name)
+    if sql is None:
+        return  # rows-only: non-SQL-expressible ops are only collected
+    rec = compare(df.columns, rows, duck, sql)
+    assert rec["hash_match"], (
+        f"{name}: {rec}\n{diff_sample(df.columns, rows, duck, sql)}"
     )
-    assert len(got) == len(want), f"rows: spark={len(got)} oracle={len(want)}"
-    gh, wh = _vhash(got), _vhash(want)
-    if gh != wh:
-        # surface a useful diff before failing
-        import pandas as pd
-
-        g = got.reindex(sorted(got.columns), axis=1).sort_values(
-            by=sorted(got.columns)).reset_index(drop=True)
-        w = want.reindex(sorted(want.columns), axis=1).sort_values(
-            by=sorted(want.columns)).reset_index(drop=True)
-        neq = (g.astype(str) != w.astype(str)).any(axis=1)
-        sample = pd.concat(
-            [g[neq].head(3).assign(_side="spark"), w[neq].head(3).assign(_side="oracle")]
-        )
-        pytest.fail(f"value hash mismatch for {name}:\n{sample}")
 
 
 def test_query_priority_names_all_exist():

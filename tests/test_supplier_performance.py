@@ -4,15 +4,17 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from asritha_metamorphetl_spark.quality.oracle import compare, diff_sample
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def test_matches_oracle_sf001(spark, duck):
     from asritha_metamorphetl_spark.pipelines import supplier_performance as sp
 
-    assert_matches_oracle(
-        spark, duck, sp.supplier_performance, sp.ORACLE_SQL, SF_CORRECT
-    )
+    df = sp.supplier_performance(spark, SF_CORRECT)
+    rows = df.collect()
+    rec = compare(df.columns, rows, duck, sp.ORACLE_SQL)
+    assert rec["hash_match"], diff_sample(df.columns, rows, duck, sp.ORACLE_SQL)
 
 
 def test_smoke_rows(spark):

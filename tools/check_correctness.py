@@ -5,8 +5,8 @@ Mimics the round driver: builds a BARE SparkSession (no engine confs — the
 round-1 events.parquet failure only reproduced under such a session), runs
 every ``__spark_entry__.queries()`` entry at sf0.01, runs the matching
 ``oracle_sql()`` string in DuckDB over the same parquet tables, and compares
-row count, column-name set, and a value hash computed over columns sorted by
-name. Run from the repo root:
+them with ``quality.oracle.compare`` (row count, column-name set, and a
+value hash computed over columns sorted by name). Run from the repo root:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 
@@ -30,9 +30,7 @@ collected per query and printed in registry order.
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 import time
@@ -41,63 +39,12 @@ import traceback
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _norm(v):
-    """Normalize a cell so Spark and DuckDB hash identically."""
-    import datetime
-    import decimal
-
-    if v is None:
-        return "\x00NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if math.isinf(v):  # int(inf) raises; render the sign portably
-            return "Inf" if v > 0 else "-Inf"
-        if v == int(v) and abs(v) < 1e15:
-            return repr(float(v))
-        return repr(round(v, 9))
-    if isinstance(v, decimal.Decimal):
-        f = float(v)
-        if math.isnan(f):
-            return "NaN"
-        if math.isinf(f):
-            return "Inf" if f > 0 else "-Inf"
-        if f == int(f) and abs(f) < 1e15:
-            return repr(float(f))
-        return repr(round(f, 9))
-    if isinstance(v, bool):
-        return str(v)
-    if isinstance(v, datetime.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(
-            f"{k}:{_norm(v[k])}" for k in sorted(v)
-        ) + "}"
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    return str(v)
-
-
-def _hash_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x01".join(_norm(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode("utf-8", "surrogatepass"))
-        h.update(b"\n")
-    return h.hexdigest()
+from asritha_metamorphetl_spark.quality.oracle import (  # noqa: E402
+    compare,
+    hash_rows as _hash_rows,  # noqa: F401 (etlbench loads it by file path)
+    record,
+    register_views,
+)
 
 
 def main() -> int:
@@ -130,13 +77,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = register_views(duckdb.connect(), sf_dir)
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
@@ -147,55 +88,24 @@ def main() -> int:
     ]
 
     def _check(name: str, fn) -> dict:
-        rec: dict = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
-            scols = sdf.columns
-            rec["spark_rows"] = len(srows)
         except Exception:
-            rec["err"] = traceback.format_exc(limit=5)
             print(f"  {name}: SPARK ERROR", file=sys.stderr)
-            return rec
-        sql = oracles.get(name)
-        if sql is None:
-            rec["err"] = "no_oracle"
+            return record(err=traceback.format_exc(limit=5))
+        rec = compare(sdf.columns, srows, con, oracles.get(name))
+        if rec["err"] == "no_oracle":
             print(f"  {name}: rows-only ({len(srows)})", file=sys.stderr)
-            return rec
-        try:
-            cur = con.cursor()
-            try:
-                cur.execute(sql)
-                ocols = [d[0] for d in cur.description]
-                orows = cur.fetchall()
-            finally:
-                cur.close()
-            rec["oracle_rows"] = len(orows)
-        except Exception:
-            rec["err"] = "ORACLE: " + traceback.format_exc(limit=3)
+        elif rec["err"]:
             print(f"  {name}: ORACLE ERROR", file=sys.stderr)
-            return rec
-        rec["rows_match"] = len(srows) == len(orows)
-        rec["schema_match"] = sorted(scols) == sorted(ocols)
-        if rec["rows_match"] and rec["schema_match"]:
-            rec["hash_match"] = _hash_rows(
-                scols, [tuple(r) for r in srows]
-            ) == _hash_rows(ocols, orows)
         else:
-            rec["hash_match"] = False
-        print(
-            f"  {name}: {'OK' if rec['hash_match'] else 'MISMATCH'} "
-            f"(spark={rec['spark_rows']} oracle={rec['oracle_rows']} "
-            f"schema={rec['schema_match']})",
-            file=sys.stderr,
-        )
+            print(
+                f"  {name}: {'OK' if rec['hash_match'] else 'MISMATCH'} "
+                f"(spark={rec['spark_rows']} oracle={rec['oracle_rows']} "
+                f"schema={rec['schema_match']})",
+                file=sys.stderr,
+            )
         return rec
 
     results: dict[str, dict] = {}
