@@ -90,9 +90,10 @@ def record(**fields) -> dict:
     return rec
 
 
-def _run(con, sql: str):
-    # A private cursor per call, so concurrent comparisons sharing one
-    # connection never interleave on it.
+def oracle_rows(con, sql: str):
+    """Column names and rows of oracle ``sql`` on ``con``. Runs on a
+    private cursor, so callers sharing one connection from several
+    threads never interleave on it."""
     cur = con.cursor()
     try:
         cur.execute(sql)
@@ -109,16 +110,22 @@ def compare(cols, rows, con, sql: str | None) -> dict:
     (the verdict; False whenever rows or schema differ), ``spark_rows``,
     ``oracle_rows`` and ``err`` (``"no_oracle"`` when ``sql`` is None, the
     oracle's traceback when it fails, otherwise None)."""
-    rec = record(spark_rows=len(rows))
     if sql is None:
-        rec["err"] = "no_oracle"
-        return rec
+        return record(spark_rows=len(rows), err="no_oracle")
     try:
-        ocols, orows = _run(con, sql)
+        ocols, orows = oracle_rows(con, sql)
     except Exception:
-        rec["err"] = "ORACLE: " + traceback.format_exc(limit=3)
-        return rec
-    rec["oracle_rows"] = len(orows)
+        return record(
+            spark_rows=len(rows),
+            err="ORACLE: " + traceback.format_exc(limit=3),
+        )
+    return verdict(cols, rows, ocols, orows)
+
+
+def verdict(cols, rows, ocols, orows) -> dict:
+    """``compare``'s record for oracle rows already fetched with
+    ``oracle_rows``."""
+    rec = record(spark_rows=len(rows), oracle_rows=len(orows))
     rec["rows_match"] = len(rows) == len(orows)
     rec["schema_match"] = sorted(cols) == sorted(ocols)
     rec["hash_match"] = (
@@ -132,7 +139,7 @@ def compare(cols, rows, con, sql: str | None) -> dict:
 def diff_sample(cols, rows, con, sql: str, n: int = 3) -> str:
     """Why ``rows`` differ from the oracle: row counts, column names, and
     up to ``n`` normalized lines found on only one side, per side."""
-    ocols, orows = _run(con, sql)
+    ocols, orows = oracle_rows(con, sql)
     mine = collections.Counter(_lines(cols, rows))
     theirs = collections.Counter(_lines(ocols, orows))
 

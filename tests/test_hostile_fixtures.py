@@ -292,8 +292,11 @@ def test_time_fixture_is_actually_hostile(hostile_time_dir):
 
 
 def _run_sweep(sf_dir: str, sweep: tuple[str, ...]) -> None:
+    # --jobs 3: the swept queries are independent; the harness prints
+    # the same records as a sequential run.
     proc = subprocess.run(
-        [sys.executable, "tools/check_correctness.py", sf_dir, *sweep],
+        [sys.executable, "tools/check_correctness.py", sf_dir, *sweep,
+         "--jobs", "3"],
         cwd=REPO,
         capture_output=True,
         text=True,

@@ -1,14 +1,16 @@
 """Every registered query must match its DuckDB oracle under the driver's
-comparison (``quality.oracle.compare``: row count, column names, and an
+comparison (``quality.oracle``: row count, column names, and an
 order-insensitive sha256 over normalized cells of the collected rows).
 This is the umbrella correctness gate — any new @register'd query is
 automatically picked up; a query without an oracle is only collected."""
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
-from asritha_metamorphetl_spark.quality.oracle import compare, diff_sample
+from asritha_metamorphetl_spark.quality.oracle import diff_sample, oracle_rows, verdict
 from tests.conftest import SF_CORRECT
 
 
@@ -22,12 +24,15 @@ def _names():
 def test_query_matches_oracle(name, spark, duck):
     from asritha_metamorphetl_spark.plans.registry import all_oracles, all_queries
 
-    df = all_queries()[name](spark, SF_CORRECT)
-    rows = df.collect()
     sql = all_oracles().get(name)
-    if sql is None:
+    with ThreadPoolExecutor(1) as pool:
+        # DuckDB answers the oracle while Spark builds and collects.
+        want = pool.submit(oracle_rows, duck, sql) if sql else None
+        df = all_queries()[name](spark, SF_CORRECT)
+        rows = df.collect()
+    if want is None:
         return  # rows-only: non-SQL-expressible ops are only collected
-    rec = compare(df.columns, rows, duck, sql)
+    rec = verdict(df.columns, rows, *want.result())
     assert rec["hash_match"], (
         f"{name}: {rec}\n{diff_sample(df.columns, rows, duck, sql)}"
     )

@@ -115,8 +115,11 @@ def test_skew_sweep_all_green(skew_dir):
     uses. A plan that silently drops/duplicates hot-key rows, breaks
     ties nondeterministically, or funnels the plateau into one
     overflowing partition fails here, not at 100 TB."""
+    # --jobs 3: the swept queries are independent; the harness prints
+    # the same records as a sequential run.
     proc = subprocess.run(
-        [sys.executable, "tools/check_correctness.py", skew_dir, *SWEEP],
+        [sys.executable, "tools/check_correctness.py", skew_dir, *SWEEP,
+         "--jobs", "3"],
         cwd=REPO,
         capture_output=True,
         text=True,
