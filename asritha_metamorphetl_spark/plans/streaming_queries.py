@@ -46,8 +46,9 @@ def _overlap(*jobs, workers: int = 3) -> None:
     concurrently on a small pool — guide §2.6: the next job's tasks
     back-fill executors freed by the current job's tail, so a family's
     seed phase costs max(job) instead of sum(job). ONLY for jobs with
-    no ordering dependency (each writes its own directory); fold
-    sequences and micro-batch counts are pinned semantics and never go
+    no ordering dependency (each writes its own directory, like the
+    independent folds of one micro-batch); the order of folds across
+    batches and micro-batch counts are pinned semantics and never go
     through here."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -558,8 +559,6 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
         # writes were the bulk of the trilogy's build wall-clock; the
         # band seed alone is a full shingle→minhash pass over 80% of
         # the corpus and the others idle behind it for free)
-        from concurrent.futures import ThreadPoolExecutor
-
         def seed_bands() -> None:
             lsh_banded(base, "text", "doc_id").write.parquet(band_dir)
             spark.createDataFrame(
@@ -588,17 +587,13 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
         def land_delta() -> None:
             # land the delta ONCE as three single-file batches
             for i in range(3):
-                delta.filter(F.col("doc_id") % 3 == i).coalesce(
-                    1
-                ).write.parquet(os.path.join(src, f"batch{i}"))
+                _land_batch(
+                    delta.filter(F.col("doc_id") % 3 == i),
+                    os.path.join(src, f"batch{i}"),
+                    i,
+                )
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(job)
-                for job in (seed_bands, seed_sketch, seed_esw, land_delta)
-            ]
-            for fut in futs:
-                fut.result()
+        _overlap(seed_bands, seed_sketch, seed_esw, land_delta, workers=4)
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
             # pin the batch once — three folds would each re-read the
@@ -628,11 +623,7 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
                     b, batch_id, esw_dir, _esw_weigh, "doc_id", 200, "esw:"
                 ),
             )
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=3) as fold_pool:
-                for fut in [fold_pool.submit(f) for f in folds]:
-                    fut.result()
+            _overlap(*folds)
 
         stream = (
             spark.readStream.schema(delta.schema)

@@ -1,28 +1,11 @@
-"""Oracle-parity tests for the product_performance and customer_sales_report
-marts, plus semantic edge-case checks."""
+"""Semantic edge-case checks for the product_performance and
+customer_sales_report marts. Their oracle parity is checked by
+``tests/test_registry_oracle.py::test_query_matches_oracle``, which runs
+every registered query, these two marts included."""
 
 from __future__ import annotations
 
-from asritha_metamorphetl_spark.quality.oracle import compare, diff_sample
-from tests.conftest import SF_CORRECT, SF_SMOKE
-
-
-def test_product_performance_oracle(spark, duck):
-    from asritha_metamorphetl_spark.pipelines import product_performance as pp
-
-    df = pp.product_performance(spark, SF_CORRECT)
-    rows = df.collect()
-    rec = compare(df.columns, rows, duck, pp.ORACLE_SQL)
-    assert rec["hash_match"], diff_sample(df.columns, rows, duck, pp.ORACLE_SQL)
-
-
-def test_customer_sales_report_oracle(spark, duck):
-    from asritha_metamorphetl_spark.pipelines import customer_sales_report as csr
-
-    df = csr.customer_sales_report(spark, SF_CORRECT)
-    rows = df.collect()
-    rec = compare(df.columns, rows, duck, csr.ORACLE_SQL)
-    assert rec["hash_match"], diff_sample(df.columns, rows, duck, csr.ORACLE_SQL)
+from tests.conftest import SF_SMOKE
 
 
 def test_zero_sale_products_kept_with_null_aggs(spark):

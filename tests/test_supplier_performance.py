@@ -1,20 +1,10 @@
-"""Flagship-mart correctness vs DuckDB oracle + edge-case unit tests."""
+"""Flagship-mart edge-case unit tests. Its oracle parity is checked by
+``tests/test_registry_oracle.py::test_query_matches_oracle``, which runs
+every registered query, supplier_performance included."""
 
 from __future__ import annotations
 
-import pytest
-
-from asritha_metamorphetl_spark.quality.oracle import compare, diff_sample
-from tests.conftest import SF_CORRECT, SF_SMOKE
-
-
-def test_matches_oracle_sf001(spark, duck):
-    from asritha_metamorphetl_spark.pipelines import supplier_performance as sp
-
-    df = sp.supplier_performance(spark, SF_CORRECT)
-    rows = df.collect()
-    rec = compare(df.columns, rows, duck, sp.ORACLE_SQL)
-    assert rec["hash_match"], diff_sample(df.columns, rows, duck, sp.ORACLE_SQL)
+from tests.conftest import SF_SMOKE
 
 
 def test_smoke_rows(spark):

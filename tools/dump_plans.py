@@ -13,6 +13,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import plan_text, session  # noqa: E402
+
 SF = "/root/testdata/sf0.01"
 
 #: (query name, what the plan demonstrates)
@@ -178,11 +180,6 @@ HEADLINERS = [
      "plan reads only the iterated rank RDD (zero parquet re-scans), "
      "broadcasts the O(1)-row node count, and top-ks via "
      "TakeOrderedAndProject"),
-    ("copurchase_triangle_rank", "exact triangle counting: degree-"
-     "ordered orientation (checkpointed once, three consumers) makes "
-     "wedge generation and closure plain hash equi-joins — no "
-     "cartesian, no broadcast nested loop, fan-out bounded O(sqrt m) "
-     "per vertex regardless of hub skew"),
     ("hll_register_table", "white-box HyperLogLog: one map-side-"
      "combining partial_max aggregate whose shuffle carries at most "
      "groups x 64 register rows per task, never the distinct ids — "
@@ -271,10 +268,6 @@ HEADLINERS = [
     ("ks_two_sample_price", "both empirical CDFs from the two-pass "
      "cumsum; sup-distance maximized in decimal over exact integers; "
      "the only SinglePartition exchanges merge partial aggregates"),
-    ("cosine_pair_histogram", "pairwise cosine bounded by hash "
-     "blocking: the self-join keys on the id-hash bucket (n^2/B "
-     "pairs), dot products are JVM zip_with/aggregate over quantized "
-     "ints — no cartesian, no Python row path"),
     ("rolling_active_users_7d", "rolling 7-day distinct actives via "
      "coverage expansion (sequence + explode to <=7 target days, "
      "dedup, count) — equi-joins and hash aggregates only; the "
@@ -335,10 +328,9 @@ HEADLINERS = [
 
 def main() -> None:
     from asritha_metamorphetl_spark.plans.registry import all_queries
-    from asritha_metamorphetl_spark.session import create_session
 
-    spark = create_session(master="local[8]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+    # local[8] is the session the plan shapes in PLANS.md were pinned on.
+    spark = session(8)
     qs = all_queries()
     out = [
         "# PLANS",
@@ -350,10 +342,7 @@ def main() -> None:
         "",
     ]
     for name, note in HEADLINERS:
-        df = qs[name](spark, SF)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_text(qs[name](spark, SF))
         out += [f"## {name}", "", f"_{note}_", "", "```", plan.rstrip(), "```", ""]
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))

@@ -9,17 +9,22 @@ executors); one whose cost barely moves is overhead-dominated locally
 growth would flag an operator whose work grows faster than its input —
 none should.
 
-Run from the repo root:  python tools/scaling_check.py
+Each query is timed by bench.py's ``measure`` on local[$SPARK_GRAFT_CPUS]
+(default 32). Only the table at the end of SCALING.md is rewritten; the
+prose above it is edited in SCALING.md itself. Run from the repo root:
+
+    python tools/scaling_check.py [--only q1,q2]
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench import measure, session  # noqa: E402
 
 SFS = ["0.001", "0.01", "0.1"]
 
@@ -165,17 +170,17 @@ QUERIES = [
     ("interpolated_quartiles_audit", "percentile vs quantile_cont blend"),
 ]
 
-RUNS = 2  # take the best of N to damp container noise
+TABLE_HEAD = "| query | shape | sf0.001 | sf0.01 | sf0.1 | x10 @0.01 | x10 @0.1 |"
+SCALING_MD = os.path.join(REPO, "SCALING.md")
 
 
-def _prior_times() -> dict[str, dict[str, float]]:
-    """Parse the existing SCALING.md table so --only re-measures a
-    subset without discarding every other row's numbers."""
+def _prior_times(path: str) -> dict[str, dict[str, float]]:
+    """Parse the existing table so --only re-measures a subset without
+    discarding every other row's numbers."""
     times: dict[str, dict[str, float]] = {}
-    path = os.path.join(REPO, "SCALING.md")
-    if not os.path.exists(path):
-        return times
-    for ln in open(path):
+    with open(path) as fh:
+        lines = fh.readlines()
+    for ln in lines:
         parts = [p.strip() for p in ln.split("|")]
         if len(parts) < 8 or not parts[3].endswith("s"):
             continue
@@ -189,388 +194,49 @@ def _prior_times() -> dict[str, dict[str, float]]:
     return times
 
 
-def main() -> None:
-    from asritha_metamorphetl_spark.plans.registry import all_queries
-    from asritha_metamorphetl_spark.session import create_session
-
-    only: set[str] | None = None
-    if len(sys.argv) > 2 and sys.argv[1] == "--only":
-        only = set(sys.argv[2].split(","))
-
-    spark = create_session(master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-
-    times = _prior_times() if only else {}
-    for sf in SFS:
-        sf_dir = f"/root/testdata/sf{sf}"
-        for name, _ in QUERIES:
-            if only is not None and name not in only:
-                continue
-            best = min(
-                _timed(qs[name], spark, sf_dir) for _ in range(RUNS)
-            )
-            times.setdefault(name, {})[sf] = best
-            print(f"sf{sf} {name}: {best:.2f}s", file=sys.stderr)
-
-    lines = [
-        "# SCALING",
-        "",
-        "Measured wall-clock (best of 2, local[32]) for headline queries at",
-        "sf0.001 / sf0.01 / sf0.1 — a 100x input range. `x10 ratio` columns",
-        "show t(sf*10)/t(sf): ~1 means fixed local overhead dominates (the",
-        "query has headroom — real work is a sliver of its time here); up to",
-        "~10 means data-proportional cost that scales out with executors.",
-        "Superlinear growth (well above 10) would flag an operator whose work",
-        "grows faster than its input; none does. Regenerate with",
-        "`python tools/scaling_check.py`.",
-        "",
-        "Streaming-parity note (VERDICT r4 #7): the two stream-stream join",
-        "queries are flat across the 100x range (ratios ~1.0) — their ~2.5 s",
-        "is FIXED micro-batch machinery (query startup, state-store init,",
-        "AvailableNow trigger cycles, 8 pinned state partitions), not data.",
-        "Round-11 caveat: the five fold parities",
-        "(ingest-dedup/Count-Min/weighted-sample/semi-additive/retry) now",
-        "run off SHARED session-cached micro-batch fixtures (VERDICT r10",
-        "#4), so their best-of-2 rows below time the cached state",
-        "READBACK — the real stream runs once per session per SF; its",
-        "cost is the first consumer's and was A/B-measured at 39.5 s",
-        "(five private runs) -> 30.6 s (shared fixtures) for the whole",
-        "block at sf0.1.",
-        "Round-12 (VERDICT r11 #1): ALL SIX file-fold fixture families",
-        "(docs trilogy, events last-value pair, gram, HLL, MoR deletes,",
-        "bucketed CDC) now prewarm CONCURRENTLY via _parity_suite — they",
-        "are independent streams over different tables, so the first",
-        "consumer pays max(family) instead of sum(families) — and the",
-        "trilogy's three per-batch folds run concurrently within each",
-        "micro-batch (independent algebras, private state dirs). With the",
-        "batch-side broadcast in the dedup fold's band join, spread=False",
-        "micro-batch banding, and 8 pinned shuffle partitions for the",
-        "build window, the parity-family bench total measured 47.7 s",
-        "(r11) -> ~29-30 s (three r12 runs; one 63 s container-weather",
-        "outlier excluded). BENCH_FULL.json's fixture_builds map records",
-        "which query carried which build.",
-        "Round-13 (VERDICT r12 #5 + ADVICE): the build-window partition",
-        "pin now lives in a PRIVATE build session (spark.newSession() —",
-        "same SparkContext/applicationId, own SQLConf), so a concurrent",
-        "non-suite query in a --jobs sweep keeps the session's 32",
-        "partitions (pinned by tests/test_parity_suite.py's mid-build",
-        "probe); a failed family build is memoized per applicationId and",
-        "re-raised cheaply instead of rebuilt once per consumer; and the",
-        "dedup fold's batch-side broadcast + coalesce(1) append are now",
-        "GUARDED by BROADCAST_MAX_BAND_ROWS (500k band rows) — a backfill",
-        "replayed through the streaming fold falls back to the shuffled",
-        "band-key join and a parallel append (path equivalence pinned by",
-        "tests/test_streaming.py).",
-        "The data-side work scales out with executors like the batch twins;",
-        "no state-store profiling is warranted at this scale. The bucketed",
-        "CDC fold is likewise dominated by its three commit cycles (manifest",
-        "publish + parquet write per batch) — the merge compute itself is",
-        "the flat O(delta) shape the plan audit shows. The same applies to",
-        "the merge-on-read queries: the first run per session BUILDS the",
-        "shared pristine table fixture (base write + three delete commits;",
-        "round 8 caches it via session.cached_fixture — reruns measured",
-        "3-14 s -> 0.5-1 s across the MoR/zone-map/clustered/dated-layout",
-        "queries), and mutating consumers copy it; wall time beyond that is",
-        "the read path: one anti-join whose broadcast hint is now",
-        "SIZE-CONDITIONED on the on-disk delete bytes (VERDICT r7 #1) —",
-        "small pending sets broadcast (base exchange-free, plan-gated),",
-        "large ones fall back to the optimizer's shuffled shape",
-        "(mor_shuffled_delete_scan pins that path under the driver hash;",
-        "tests/test_mor.py pins the plan switch both ways). Compaction is",
-        "crash-safe write-new-then-swap: replacements land fully on disk",
-        "before any original is displaced.",
-        "",
-        "Two-level assignment note (VERDICT r6 #1): the coarse->fine",
-        "centroid-assignment kernel now scores ONLY the fine cells of each",
-        "row's probed coarse groups via a gathered per-group matmul (the",
-        "masked full (batch x nlist) matmul is gone), and the coarse",
-        "grouping is computed once driver-side and shipped with the",
-        "centroid broadcast instead of being recomputed per Arrow batch.",
-        "Measured kernel-level (numpy, batch=4096, dim=64, w=3): 9.23 s ->",
-        "0.11 s at nlist=16384/n_coarse=128 (81x) and 25.4 s -> 0.67 s at",
-        "nlist=65536/n_coarse=256 (38x), with identical winners; parity",
-        "with the old masked spelling is pinned at nlist=4096 by",
-        "tests/test_llm_ops.py::test_two_level_gather_matches_masked_",
-        "reference_at_large_nlist and ivf_twolevel_agreement stayed",
-        "hash-green.",
-        "",
-        "Round-13 mover audit: only two shared-query lines moved >1.8x vs",
-        "the r12 driver run. streaming_ingest_dedup_parity 0.39 -> 10.6 s",
-        "is the window rotation moving the ONE shared-suite build onto the",
-        "new first parity consumer (r12 charged it to watermark_drop at",
-        "8.7 s; fixture_builds itemizes it). doc_repetition_profile",
-        "3.9 -> 8.0 s is cold-codegen noise, not code: three isolated",
-        "re-runs at sf0.1 measure 10.6 (cold) / 4.4 / 3.9 s on an",
-        "unchanged dependency chain — the warm value reproduces r12's.",
-        "",
-        "Bench-noise note (VERDICT r5 #8): the r5 `product_performance` +21%",
-        "round-over-round wobble does NOT reproduce — two back-to-back r6",
-        "bench runs at sf0.1 measured 2.67 s / 2.48 s (r4: 2.42, r5: 2.93)",
-        "with zero code changes to the pipeline, and `customer_sales_report`",
-        "likewise returned to 4.45/4.66 s from r5's 6.14. Observed",
-        "same-session run-to-run variance on sub-2 s queries reaches ±50%",
-        "(e.g. knn_lsh_topk 1.18 vs 2.26 s in consecutive runs); treat",
-        "single-query deltas under ~2x in this container as noise and",
-        "compare only the multi-run aggregate. The r8 bench (238 queries,",
-        "396.9 s total) ran concurrently with a full pytest suite, so its",
-        "absolute per-query numbers carry extra contention; the aggregate",
-        "still came in BELOW r7's 198-query total (417.9 s) because the",
-        "fixture cache removed repeated table builds.",
-        "",
-        "Audit-query sampling/blocking contracts (VERDICT r9 #6): profile",
-        "and audit queries that are pairwise by nature (fuzzy matching,",
-        "similarity histograms, co-occurrence graphs) NEVER run all-pairs;",
-        "each states ONE of three contracts in its docstring, mirrored",
-        "verbatim in its DuckDB oracle so the hash stays exact:",
-        "(1) EXACT-RECALL BLOCKING — candidate keys provably cover every",
-        "qualifying pair (fuzzy_part_name_pairs: PassJoin 3-segment",
-        "pigeonhole for same-length ED<=2; LSH bands for Jaccard at the",
-        "banded thresholds). The oracle may keep a naive spelling: results",
-        "coincide, so the hash-match PROVES the recall claim.",
-        "(2) SAMPLING — pair work runs on a content-independent hash block",
-        "sample whose expected size is stated (cosine_pair_histogram:",
-        "B = ceil(n/COS_BLOCK_ROWS) blocks derived in-plan from COUNT(*),",
-        "pair work n*COS_BLOCK_ROWS/2, linear). The oracle derives the",
-        "same parameter from the same count.",
-        "(3) TRUNCATION — a top-m-per-key cap with a stated deterministic",
-        "ordering (part_copurchase_pagerank: top-64 out-neighbors by",
-        "weight; copurchase_triangle_rank: MUTUAL top-64, so degree <= 64",
-        "strictly and wedges are linear in nodes; frequent_triples: each",
-        "basket sliced to its TRIPLE_BASKET_CAP=24 smallest partkeys after",
-        "array_sort, so per-order struct emission is <= C(24,3)=2,024",
-        "STRUCTURALLY — a 10k-item mega-basket emits 2,024 structs, not",
-        "~1.7e11 — closing the r10 verdict's one weak mark). The oracle",
-        "applies the identical row_number cap.",
-        "A docstring may not claim a scale bound the plan does not have;",
-        "tests/test_round10_plans.py gates the four round-10 contract",
-        "holders (recall property, block-key cardinality, derived block",
-        "count, degree bounds) and tests/test_round11_plans.py gates the",
-        "triples cap (mega-basket bound, oracle mirror, non-binding at the",
-        "standard catalog so supports stay exact).",
-        "",
-        "Adversarial skew sweep (VERDICT r10 #6, round 11):",
-        "tools/build_skew_fixture.py derives a hostile catalog from a real",
-        "sf dir — ~20% of events remapped to ONE user, ~20% of orders to",
-        "ONE customer, a ~20% tie plateau on o_totalprice (one value",
-        "owning a fifth of the global-rank input), and every ~599th",
-        "order's lineitem rows collapsed onto ONE MEGA-BASKET (102",
-        "distinct parts at sf0.01 — 4x the triples cap). EIGHTEEN",
-        "registered queries + their UNCHANGED oracles run hash-green on",
-        "it through tools/check_correctness.py at BOTH sf0.01 and sf0.1",
-        "(tests/test_skew_fixture.py pins the sf0.01 sweep in the",
-        "suite; round 12 extended the original thirteen with the",
-        "every-k-th global-rank sample, nested-median MAD, IGNORE NULLS",
-        "spans, CUBE margins, and the null-safe join — 18/18 at sf0.1",
-        "in 54.4 s; the r11 thirteen ran green in 44.2 s,",
-        "mega-basket 1,009 distinct parts): sessionization, journeys, salted",
-        "join, running spend, cume_dist, percentile bands, top-decile",
-        "share, weighted median, RFM, and the basket expansions —",
-        "frequent_triples' hash-match on this fixture proves the",
-        "TRUNCATION contract END-TO-END where the cap BINDS (12 reported",
-        "triples capped vs 38 uncapped), and the Sigma-k^2 pair",
-        "expansions (market_basket_rules, copurchase_jaccard_parts) stay",
-        "exact through the 100-part basket. Warmed sf0.1 wall-clock,",
-        "skew vs plain (local[32]): event_sessions 0.98 vs 1.06 s,",
-        "user_journeys 1.01 vs 0.66, salted_hot_user_events 1.36 vs 0.84,",
-        "running_customer_spend 0.98 vs 0.91, cume_dist_scalable 3.63 vs",
-        "2.28, order_value_percentile_bands 2.65 vs 2.38,",
-        "weighted_median_price 3.22 vs 3.00 — worst case ~1.6x, no",
-        "blow-ups: per-key windows stay per-key, the salted join scatters",
-        "the hot key, and the two-pass global machinery's range-partition",
-        "tie handling (tie-break keys in every order_by) absorbs the",
-        "plateau.",
-        "",
-        "Hostile text/time sweeps (VERDICT r11 #6, round 12): two more",
-        "adversarial catalogs beside the skew fixture, both swept",
-        "UNCHANGED-oracle hash-green at sf0.01 AND sf0.1",
-        "(tests/test_hostile_fixtures.py pins the sf0.01 sweeps).",
-        "HOSTILE TEXT (tools/build_hostile_text_fixture.py): NULL /",
-        "empty / whitespace-only documents, Cyrillic-confusable",
-        "rewrites, and a 200-char shared boilerplate prefix on ~6% of",
-        "docs — 14 dedup/text-quality queries green (sf0.1 sweep 60.1 s),",
-        "proving both engines agree on null/empty split semantics,",
-        "multi-byte shingles, and that the all-empty class folds into",
-        "ONE exact-dup group instead of exploding a band join. HOSTILE",
-        "TIME (tools/build_hostile_time_fixture.py): odd event_ids",
-        "shifted back 7 days — the streaming last-value fixtures'",
-        "event_id%2 batch split then delivers an almost entirely OLDER",
-        "second micro-batch, so every odd row is a late arrival across a",
-        "batch boundary — plus a 20% midnight tie plateau (6,291 tied",
-        "rows at sf0.1; zero gaps of exactly the 1800 s session",
-        "threshold, preserving the session-parity invariant) — 17",
-        "ordered-window/streaming-fold queries green at both SFs (the",
-        "original 14 in a 68.7 s sf0.1 sweep; extended to 17 with the",
-        "round-12 anti-chronological fold, watermark-drop, and sliding",
-        "parities — 17/17 in 49.6 s at sf0.1), proving the argmax/min",
-        "folds are arrival-order independent, the watermark",
-        "drop/emission boundaries survive a week-shifted time origin,",
-        "and every (ts)-ordered window really exercises its event_id",
-        "tiebreak.",
-        "",
-        "incremental_dedup_pairs attribution note (VERDICT r11 #4): the",
-        "apparent 1.57 s (r10) -> 2.6-3.0 s (r11) regression is CONTAINER",
-        "DRIFT, not code. Evidence (round 12): (1) the query's dependency",
-        "chain (passage_queries, operators/dedup, functions/hashing) is",
-        "unchanged since round 6; (2) the r10 commit (1f31dfb) checked out",
-        "verbatim and run in today's container times 2.5-3.7 s over four",
-        "warmed runs — the same band as HEAD; (3) the formatted physical",
-        "plans of the r10 checkout and HEAD are line-identical (128 lines,",
-        "zero diff after expr-id normalization). The 1.57 s r10 number was",
-        "a faster container day; the streaming/windows.py fold refactor",
-        "suspected in the r11 verdict is exonerated by (3).",
-        "",
-        "FINITE-VECTOR gate (round 13, VERDICT r12 #6): the similarity /",
-        "clustering families (cosine/LSH/IVF kNN + recall evals, SemDeDup,",
-        "kmeans step, near-dups, cosine histogram, the dim/label/norm",
-        "profiles) EXCLUDE degenerate vectors — any NaN/Inf component, or",
-        "zero norm — at the scan (operators/similarity.finite_vectors),",
-        "mirrored verbatim in every gated oracle (finite_vec_where):",
-        "cosine of a zero vector is 0/0 and one NaN component poisons",
-        "every dot product it touches. On a clean catalog the gate passes",
-        "all rows (hashes unchanged — re-verified); the excluded residue",
-        "is QUANTIFIED, not silent, by embedding_degenerate_audit. The",
-        "gate is row-local (one O(dim) fold inside the scan stage, no",
-        "shuffle). Subnormally tiny vectors pass on purpose — and the",
-        "hostile-embedding sweep (tools/build_hostile_embedding_fixture,",
-        "25 queries green) caught a REAL kernel bug there: the Arrow",
-        "kernels' 1e-12 norm clamp crushed tiny-but-valid vectors to",
-        "~zero similarity where the double-math oracle did not; the",
-        "clamp floor is now the smallest normal float64",
-        "(similarity._NORM_FLOOR), preserving only the 0/0 guard.",
-        "",
-        "FINITE-VECTOR gate, second wave (round 13 continued): running",
-        "the remaining ungated embedding consumers through the hostile",
-        "fixture showed every quantizing / centering / recall query",
-        "either CRASHING under ANSI (NaN/Inf reaching FLOOR/ROUND ->",
-        "BIGINT: the int8/dim/centering profiles, centroid bands, the",
-        "PQ encode) or silently diverging from its oracle (covariance",
-        "rows/columns of NaN; BQ/PQ/IVF-PQ recall floors dragged below",
-        "0.8 by degenerate rows; curation_verdict's Spark sem stage",
-        "reading ungated input against an already-gated oracle; the",
-        "streamed gram fold disagreeing with DuckDB on NaN cells). All",
-        "EIGHTEEN now carry the gate (PQ / IVF-PQ / residual / BQ-recall",
-        "/ JL stays ungated, hard negatives, code histogram, hybrid",
-        "RRF's dense side, int8 / dim / centering / covariance /",
-        "label-stats profiles, centroid bands, curation_verdict,",
-        "streaming_gram_parity), mirrored verbatim in each oracle; the",
-        "sweep is 43 queries green at both SFs. Deliberately ungated",
-        "and byte-identical: knn_l2_topk, knn_bq_topk, knn_jl_*,",
-        "pca_power_projection — their ungated hostile behavior is",
-        "already cross-engine identical, so gating them would discard",
-        "telemetry for no correctness gain. At 100 TB the gate is the",
-        "difference between one bad ingest row killing a stage (ANSI",
-        "cast crash) and a quantified, audited exclusion.",
-        "",
-        "Gate-triple fuzz (round 13, post-sweep): a hypothesis property",
-        "test drives ARBITRARY IEEE-754 vectors (NaN/±Inf/±0/subnormal/",
-        "overflow-square/null-component/empty) through the engine gate,",
-        "the oracle mirror, and a pure-python reference, asserting the",
-        "kept sets identical. It caught a real oracle hazard the seven",
-        "curated fixture classes missed: SQL AND does not short-circuit",
-        "and DuckDB's list_dot_product RAISES on a NULL-containing list,",
-        "so a null-component vector crashed every gated ORACLE where the",
-        "engine gate merely drops the row. The mirror's norm conjunct is",
-        "now a null-safe element-wise x*x sum — identical arithmetic on",
-        "finite data (nonnegative terms, order cannot flip > 0),",
-        "evaluable instead of fatal on nulls. Selfchecks at both SFs and",
-        "the 43-query hostile sweep re-ran green on the fixed mirror.",
-        "",
-        "Text-primitive cross-engine pins (round 13, post-sweep): the",
-        "same attack-the-primitive pattern applied to the text surface",
-        "(tests/test_text_primitives_crossengine.py). split(' ') /",
-        "length() / md5() agree cross-engine over NUL bytes, astral",
-        "letters, combining marks, RTL/zero-width controls, and",
-        "ligatures. The sweep found ONE divergence: lower() on U+0130",
-        "(Spark keeps the full-Unicode combining dot, DuckDB drops it).",
-        "Exposure audit: near_dup_survivors strips [^a-z0-9 ] after",
-        "lowercasing (re-converges by construction), priority_parse",
-        "lowercases an ASCII enum (safe by domain), and",
-        "doc_prefix_dup_groups — the one latent exposure — is covered",
-        "by a domain-guard test asserting no fixture corpus carries",
-        "U+0130 at any SF. Round-14 note: folding the divergence (e.g.",
-        "stripping U+0307 after lower on both sides) needs a window",
-        "seat; until then the guard keeps the hash equality grounded",
-        "in the data domain, not luck.",
-        "",
-        "ROUND(x, n>0) cross-engine hazard (round 13, post-sweep): the",
-        "same primitive sweep found that Spark rounds the SHORTEST",
-        "DECIMAL REPR half-up (BigDecimal.valueOf) while DuckDB rounds",
-        "the x*10^n double PRODUCT, so a thin input set splits the",
-        "engines (1.005/1.015/1.025 -> Spark 1.01/1.02/1.03, DuckDB",
-        "1.0/1.01/1.02) while most repr-ties happen to agree",
-        "(2.675/0.045: product error lands on the repr side). The",
-        "repo's integer-grid discipline — quantize with scale-0",
-        "ROUND(x*K)::BIGINT, where exact binary .5 ties exist and both",
-        "engines round them away from zero identically — is the",
-        "tie-safe form and is pinned as such",
-        "(tests/test_text_primitives_crossengine.py). Exposure today:",
-        "zero — the 370-query selfchecks are green at BOTH SFs, i.e.",
-        "no fixture value lands in the divergent set; the residual",
-        "surface is every final mirrored ROUND(_, 4|6) column over",
-        "computed doubles, whose 17-digit shortest reprs make a short",
-        "tie astronomically unlikely but not impossible. New oracles",
-        "should keep final mirrored doubles on integer grids; auditing",
-        "the existing scale-n rounds onto grids is round-14+ hygiene,",
-        "window-budgeted like any oracle change.",
-        "",
-        "Epoch-seconds mirror, residual zones (round 13, post-sweep):",
-        "the round-11 FLOOR discipline already aligned unix_timestamp",
-        "with FLOOR(epoch()) on the fixture domain; the primitive sweep",
-        "mapped the two zones where they STILL split, now pinned in",
-        "tests: pre-epoch fractional timestamps (Spark truncates toward",
-        "zero -> 0, FLOOR floors -> -1) and far-future timestamps where",
-        "DuckDB's DOUBLE epoch exceeds the 2^52 microsecond grid",
-        "(year 9999: ...799.999999 rounds to ...800.0 before FLOOR —",
-        "double epochs carry microseconds exactly only to ~year 2112).",
-        "Every fixture timestamp is 1990s-2030s, so no registered",
-        "oracle crosses either zone; a future epoch-heavy source past",
-        "2112 must mirror through integer microseconds instead.",
-        "",
-        "Intended-scale note for null_safe_join_audit (ADVICE r12): the",
-        "audit's null class is QUADRATIC BY CONSTRUCTION — ~1% of each",
-        "join half carries a NULL key and <=> matches null-to-null, so",
-        "the null group cross-joins (~56M pairs at sf1, ~5.6B at sf10).",
-        "That is the semantics being pinned, not an accident: the query",
-        "is a CONTRACT AUDIT for <=> vs IS NOT DISTINCT FROM, sized for",
-        "the correctness harness's SFs (<= sf0.1; intended max ~sf1).",
-        "Production null-safe joins coalesce nulls to salted sentinels",
-        "exactly because of this blow-up — the docstring says so and",
-        "this row documents the audit's intended ceiling.",
-        "",
-        "Round-8 float discipline note: every new statistics query",
-        "(correlation, OLS, Gini, Theil-Sen, PSI, autocorrelation, ...)",
-        "aggregates EXACT integers (cents/hundredths, 1e-6-quantized",
-        "transcendentals) and computes floats only in final mirrored",
-        "expressions, so partition order cannot perturb a hash — the same",
-        "contract that keeps them deterministic on a 1000-executor",
-        "cluster. Global ranks use the two-pass range-partitioned",
-        "machinery, and the Theil-Sen median is found by cumulative",
-        "counting over per-value counts; the registry-wide plan gate",
-        "(test_no_query_funnels_raw_rows_single_partition) holds for all",
-        "239 registered queries.",
-        "",
-        "| query | shape | sf0.001 | sf0.01 | sf0.1 | x10 @0.01 | x10 @0.1 |",
-        "|---|---|---|---|---|---|---|",
-    ]
+def write_table(path: str, times: dict[str, dict[str, float]]) -> None:
+    """Rewrite the table at the end of ``path`` from ``times``
+    (``{query: {sf: seconds}}``); every line above the table header is
+    kept byte for byte, so SCALING.md is the one source of its prose."""
+    with open(path) as fh:
+        text = fh.read()
+    lines = [TABLE_HEAD, "|---|---|---|---|---|---|---|"]
     for name, shape in QUERIES:
-        t = times[name]
+        # ratios from the printed cells, so a row --only leaves alone
+        # keeps its ratios digit for digit
+        t = {sf: round(sec, 2) for sf, sec in times[name].items()}
         r1 = t["0.01"] / t["0.001"] if t["0.001"] > 0 else float("nan")
         r2 = t["0.1"] / t["0.01"] if t["0.01"] > 0 else float("nan")
         lines.append(
             f"| {name} | {shape} | {t['0.001']:.2f}s | {t['0.01']:.2f}s "
             f"| {t['0.1']:.2f}s | {r1:.1f} | {r2:.1f} |"
         )
-    lines.append("")
-    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
-        f.write("\n".join(lines))
+    with open(path, "w") as fh:
+        fh.write(text[: text.index(TABLE_HEAD)] + "\n".join(lines) + "\n")
+
+
+def main() -> None:
+    from asritha_metamorphetl_spark.plans.registry import all_queries
+
+    only: set[str] | None = None
+    if len(sys.argv) > 2 and sys.argv[1] == "--only":
+        only = set(sys.argv[2].split(","))
+
+    spark = session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    qs = all_queries()
+    subset = {n: qs[n] for n, _ in QUERIES if only is None or n in only}
+
+    times = _prior_times(SCALING_MD)
+    for sf in SFS:
+        runs, failed = measure(spark, subset, f"/root/testdata/sf{sf}")
+        if failed:
+            sys.exit(f"scaling_check: sf{sf} failed: {failed}")
+        for name, run in runs.items():
+            times.setdefault(name, {})[sf] = sum(run)
+            print(f"sf{sf} {name}: {sum(run):.2f}s", file=sys.stderr)
+    spark.stop()
+    write_table(SCALING_MD, times)
     print(f"wrote SCALING.md ({len(QUERIES)} queries x {len(SFS)} SFs)")
-
-
-def _timed(fn, spark, sf_dir: str) -> float:
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.time() - t0
 
 
 if __name__ == "__main__":
