@@ -20,16 +20,15 @@ Improvements over the reference (each a documented anti-pattern, SURVEY §4):
 from __future__ import annotations
 
 import datetime as _dt
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from asritha_metamorphetl_spark.quality.asserts import assert_unique
 from asritha_metamorphetl_spark.schema import conform, rename_positional
+from asritha_metamorphetl_spark.session import overlap
 
 
 @dataclass
@@ -84,14 +83,7 @@ def ingest_entity(
             .parquet(warehouse.legacy_path(entity))
         )
 
-    # inheritable_thread_target carries the caller's local properties
-    # (its job group, e.g. Pipeline's node name) onto the pool threads,
-    # so the two write jobs are attributed to the calling node.
-    inherit = inheritable_thread_target(conformed.sparkSession)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(inherit(write)) for write in (write_raw, write_legacy)
-        ]
-        for fut in futs:
-            fut.result()
+    # the pool threads keep the caller's job group (e.g. Pipeline's node
+    # name), so the two write jobs are attributed to the calling node
+    overlap(conformed.sparkSession, write_raw, write_legacy, workers=2)
     return conformed

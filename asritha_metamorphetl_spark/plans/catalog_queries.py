@@ -875,7 +875,7 @@ def clustered_skipping_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     halfyear = (F.year("o_orderdate") - F.lit(1995)) * 2 + (
         F.month("o_orderdate") >= 7
     ).cast("int")
-    from asritha_metamorphetl_spark.session import cached_fixture
+    from asritha_metamorphetl_spark.session import cached_fixture, overlap
 
     def build(root: str) -> None:
         # The 14 per-period commits and the scattered layout are
@@ -884,26 +884,23 @@ def clustered_skipping_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same sequential manifest chain the old per-period commit()
         # loop produced, and the scattered table builds concurrently
         # on its own thread.
-        from concurrent.futures import ThreadPoolExecutor
-
         clus = SnapshotTable(spark, f"{root}/clustered")
         scat = SnapshotTable(spark, f"{root}/scattered")
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_clus = pool.submit(
-                clus.commit_many,
+        overlap(
+            spark,
+            lambda: clus.commit_many(
                 [
                     orders.filter(halfyear == p).repartition(1)
                     for p in range(CLUSTER_GAIN_PERIODS)
                 ],
                 stats_cols=["o_orderdate"],
-            )
-            fut_scat = pool.submit(
-                scat.commit,
+            ),
+            lambda: scat.commit(
                 orders.repartition(CLUSTER_GAIN_PERIODS, "o_orderkey"),
                 stats_cols=["o_orderdate"],
-            )
-            fut_clus.result()
-            fut_scat.result()
+            ),
+            workers=2,
+        )
 
     # both layouts are read-only after the build: one build per session
     root = cached_fixture(spark, "cluster_gain", sf_dir, build)

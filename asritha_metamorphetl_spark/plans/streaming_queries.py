@@ -23,7 +23,10 @@ SURVEY.md §7.3 notes any streaming surface is green-field).
 
 from __future__ import annotations
 
+import os
+import threading
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,6 +34,7 @@ from pyspark.sql import functions as F
 from asritha_metamorphetl_spark.functions.numeric import exact_sum
 from asritha_metamorphetl_spark.plans.fixtures import _prewarm
 from asritha_metamorphetl_spark.plans.registry import register
+from asritha_metamorphetl_spark.session import overlap
 from asritha_metamorphetl_spark.sources.files import Catalog
 from asritha_metamorphetl_spark.streaming.windows import (
     hourly_event_counts,
@@ -41,36 +45,64 @@ from asritha_metamorphetl_spark.streaming.windows import (
 _AWAIT_SEC = 120
 
 
-def _overlap(*jobs, workers: int = 3) -> None:
-    """Run independent fixture-build jobs (seed writes, delta landings)
-    concurrently on a small pool — guide §2.6: the next job's tasks
-    back-fill executors freed by the current job's tail, so a family's
-    seed phase costs max(job) instead of sum(job). ONLY for jobs with
-    no ordering dependency (each writes its own directory, like the
-    independent folds of one micro-batch); the order of folds across
-    batches and micro-batch counts are pinned semantics and never go
-    through here."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(workers, len(jobs))) as pool:
-        for fut in [pool.submit(job) for job in jobs]:
-            fut.result()
-
-
 def _land_batch(df: DataFrame, path: str, index: int) -> None:
     """Land ``df`` as ONE parquet file under ``path`` for a
-    ``maxFilesPerTrigger=1`` stream, then pin the directory's and its
+    one-file-per-trigger ``_replay``, then pin the directory's and its
     files' modification times to ``1000 * (index + 1)`` seconds.
     FileStreamSource delivers files in mtime order, so batch ``index``
     is the ``index``-th micro-batch however concurrent landings
-    (``_overlap``) interleave their commits."""
-    import os
-
+    interleave their commits."""
     df.coalesce(1).write.parquet(path)
     pinned = (1000 * (index + 1),) * 2
     for name in os.listdir(path):
         os.utime(os.path.join(path, name), pinned)
     os.utime(path, pinned)
+
+
+def _landings(src: str, frames) -> list:
+    """One job per frame: frame ``i`` lands at ``<src>/batch{i}`` as the
+    ``i``-th micro-batch of a ``_replay`` over ``src``. The jobs are
+    independent, so callers overlap them."""
+    return [
+        partial(_land_batch, df, os.path.join(src, f"batch{i}"), i)
+        for i, df in enumerate(frames)
+    ]
+
+
+def _await(query, what: str) -> None:
+    """Wait up to ``_AWAIT_SEC`` for a bounded (AvailableNow) stream,
+    then stop it. ``awaitTermination`` returns False on timeout instead
+    of raising; raise loudly rather than read a partial sink."""
+    try:
+        if not query.awaitTermination(_AWAIT_SEC):
+            raise TimeoutError(f"{what} still running after {_AWAIT_SEC}s")
+    finally:
+        query.stop()
+
+
+def _replay(spark: SparkSession, src: str, schema, root: str, sink, what: str):
+    """Replay the batches landed under ``src`` (``_landings``) as one
+    micro-batch per file, in landing order, into the writer
+    ``sink(stream)`` returns; checkpointed under ``<root>/ckpt`` and run
+    to completion with AvailableNow."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*/")
+    )
+    query = (
+        sink(stream)
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(query, what)
+
+
+#: Held over the set → ``start()`` → restore of ``_materialize``'s
+#: shuffle-partition pin, so concurrent calls never restore each
+#: other's pinned value.
+_PIN_LOCK = threading.Lock()
 
 
 def _materialize(
@@ -83,42 +115,35 @@ def _materialize(
     holds only the aggregated output (windows × types — bounded), never
     the raw stream.
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    DURATION OF THIS STREAMING QUERY ONLY (restored after). For stateful
-    streaming this is a first-class deploy knob, not a tuning hack: the
-    partition count is frozen into the state store at first checkpoint,
-    and every partition costs a state-store instance per stateful
-    operator per micro-batch (measured locally: the interval join is
-    5× slower at 32 partitions than at 8 on the same data — pure
-    per-instance overhead). Size it to the expected key cardinality in
-    the watermark horizon; the parity fixtures' horizons are small."""
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for THIS
+    STREAMING QUERY ONLY: the stream takes its partition count at
+    ``start()``, so the session value is restored right after it. For
+    stateful streaming this is a first-class deploy knob, not a tuning
+    hack: the partition count is frozen into the state store at first
+    checkpoint, and every partition costs a state-store instance per
+    stateful operator per micro-batch (measured locally: the interval
+    join is 5× slower at 32 partitions than at 8 on the same data —
+    pure per-instance overhead). Size it to the expected key
+    cardinality in the watermark horizon; the parity fixtures' horizons
+    are small."""
     spark = stream_df.sparkSession
     key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    if state_partitions is not None:
-        spark.conf.set(key, str(state_partitions))
     name = f"stream_result_{uuid.uuid4().hex[:12]}"
-    try:
-        query = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+    writer = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    with _PIN_LOCK:
+        saved = spark.conf.get(key)
+        if state_partitions is not None:
+            spark.conf.set(key, str(state_partitions))
         try:
-            finished = query.awaitTermination(_AWAIT_SEC)
-            if not finished:
-                # awaitTermination returns False on timeout instead of
-                # raising — surface it loudly rather than hash-comparing a
-                # partial memory-sink snapshot downstream.
-                raise TimeoutError(
-                    f"streaming query {name} still running after {_AWAIT_SEC}s"
-                )
+            query = writer.start()
         finally:
-            query.stop()
-    finally:
-        spark.conf.set(key, saved)
+            spark.conf.set(key, saved)
+    _await(query, f"streaming query {name}")
     return spark.table(name)
 
 
@@ -381,18 +406,16 @@ GROUP BY o_orderkey % 36
 def streaming_bucketed_cdc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bucketed CDC upsert sink under a REAL streaming query: the
     changelog's three sequence bands land as parquet files, a
-    ``readStream`` with ``maxFilesPerTrigger=1`` delivers them as
-    separate micro-batches into ``cdc_upsert_stream_bucketed`` (one
-    atomic bucketed version per batch, only delta-touched buckets
-    rewritten), and the final live state is profiled against the plain
-    all-at-once last-writer-wins oracle. Whatever order the source
-    lists the files in, the tombstone-retaining merge converges — the
-    property the sink's at-least-once ``foreachBatch`` contract needs.
-    This puts the micro-batch path itself (not just the batch merge
-    math) under a CORRECTNESS row. The stream run is
-    ``_cdc_stream_fixture`` inside the concurrent parity suite; the
-    band sequence itself is unchanged."""
-    import os
+    ``_replay`` delivers them as separate micro-batches into
+    ``cdc_upsert_stream_bucketed`` (one atomic bucketed version per
+    batch, only delta-touched buckets rewritten), and the final live
+    state is profiled against the plain all-at-once last-writer-wins
+    oracle. Whatever order the source lists the files in, the
+    tombstone-retaining merge converges — the property the sink's
+    at-least-once ``foreachBatch`` contract needs. This puts the
+    micro-batch path itself (not just the batch merge math) under a
+    CORRECTNESS row. The stream run is ``_cdc_stream_fixture`` inside
+    the concurrent parity suite; the band sequence itself is unchanged."""
 
     from asritha_metamorphetl_spark.operators.cdc import cdc_live
     from asritha_metamorphetl_spark.sources.bucketed import BucketedCdcTable
@@ -416,7 +439,6 @@ def _cdc_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     the other families. The streamed table lands under ``<root>/tbl``;
     the consumer only READS (``cdc_live`` rollup), so caching is
     sound."""
-    import os
 
     from asritha_metamorphetl_spark.plans.catalog_queries import (
         _orders_changelog,
@@ -432,39 +454,27 @@ def _cdc_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         src = os.path.join(root, "changelog")
         # materialize the 5-branch changelog ONCE (the three band writes
         # would otherwise each rescan orders per branch), and land each
-        # band as a single file so maxFilesPerTrigger=1 delivers EXACTLY
+        # band as a single file so the replay delivers EXACTLY
         # three micro-batches — one per sequence band, the semantics
         # under test
         changelog = _orders_changelog(spark, sf_dir).localCheckpoint(
             eager=True
         )
         batches = _seq_band_batches(changelog)
-
-        # three independent band writes off the pinned changelog —
-        # overlap them (r14, §2.6); _land_batch keeps the band order
-        def _land(i: int, b: DataFrame):
-            return lambda: _land_batch(b, os.path.join(src, f"band{i}"), i)
-
-        _overlap(*[_land(i, b) for i, b in enumerate(batches)])
-        schema = batches[0].schema
+        # three independent band writes off the pinned changelog
+        overlap(spark, *_landings(src, batches))
 
         table = BucketedCdcTable(
             spark, os.path.join(root, "tbl"), keys=["o_orderkey"], n_buckets=16
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*/")
+        _replay(
+            spark,
+            src,
+            batches[0].schema,
+            root,
+            lambda stream: cdc_upsert_stream_bucketed(stream, table),
+            "bucketed CDC stream",
         )
-        q = (
-            cdc_upsert_stream_bucketed(stream, table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_SEC):
-            q.stop()
-            raise TimeoutError("bucketed CDC stream did not finish")
 
     return cached_fixture(spark, "stream_bucketed", sf_dir, build)
 
@@ -509,15 +519,13 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
     IDENTICAL three delta files, ~13.6 s of the bench tail for ~6 s of
     distinct data work). The base/delta split, the three landed delta
     files, and the three seeded states are byte-identical to the former
-    per-query builds; one ``readStream`` with ``maxFilesPerTrigger=1``
-    delivers the same three micro-batches, and the combined
-    ``foreachBatch`` applies each algebra's fold (sets, sums, order
-    statistics) to its OWN state directory — per-batch semantics,
-    retry contracts, and final artifacts are unchanged, so each parity
-    query's oracle hash still certifies its own fold. Cached per
-    (session, sf) via ``cached_fixture``; consumers treat the artifacts
-    as read-only."""
-    import os
+    per-query builds; one ``_replay`` delivers the same three
+    micro-batches, and the combined ``foreachBatch`` applies each
+    algebra's fold (sets, sums, order statistics) to its OWN state
+    directory — per-batch semantics, retry contracts, and final
+    artifacts are unchanged, so each parity query's oracle hash still
+    certifies its own fold. Cached per (session, sf) via
+    ``cached_fixture``; consumers treat the artifacts as read-only."""
 
     from asritha_metamorphetl_spark.operators.dedup import lsh_banded
     from asritha_metamorphetl_spark.operators.frequent import countmin_sketch
@@ -586,14 +594,14 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
 
         def land_delta() -> None:
             # land the delta ONCE as three single-file batches
-            for i in range(3):
-                _land_batch(
-                    delta.filter(F.col("doc_id") % 3 == i),
-                    os.path.join(src, f"batch{i}"),
-                    i,
-                )
+            for land in _landings(
+                src, [delta.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+            ):
+                land()
 
-        _overlap(seed_bands, seed_sketch, seed_esw, land_delta, workers=4)
+        overlap(
+            spark, seed_bands, seed_sketch, seed_esw, land_delta, workers=4
+        )
 
         def apply(batch_df: DataFrame, batch_id: int) -> None:
             # pin the batch once — three folds would each re-read the
@@ -623,27 +631,16 @@ def _docs_trilogy_fixture(spark: SparkSession, sf_dir: str) -> str:
                     b, batch_id, esw_dir, _esw_weigh, "doc_id", 200, "esw:"
                 ),
             )
-            _overlap(*folds)
+            overlap(b.sparkSession, *folds)
 
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*/")
+        _replay(
+            spark,
+            src,
+            delta.schema,
+            root,
+            lambda stream: stream.writeStream.foreachBatch(apply),
+            "docs trilogy stream",
         )
-        # NOTE: shuffle partitions stay at the session's 32 here —
-        # unlike the state-store streams _materialize documents, the
-        # dedup fold joins the batch against the CORPUS-sized band
-        # table every micro-batch, and throttling that join's
-        # parallelism measured ~2x slower at 8 partitions
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_SEC):
-            q.stop()
-            raise TimeoutError("docs trilogy stream did not finish")
 
     return cached_fixture(spark, "stream_docs_trilogy", sf_dir, build)
 
@@ -698,20 +695,19 @@ def _parity_suite(spark: SparkSession, sf_dir: str, family: str) -> str:
 def streaming_ingest_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time dedup under a REAL streaming query: the base corpus'
     band rows are seeded as the persisted band artifact, the delta
-    documents land as three parquet files, a ``readStream`` with
-    ``maxFilesPerTrigger=1`` delivers them as separate micro-batches
-    into the incremental-dedup fold (each batch pairs against
-    base + everything ingested before it, appends its pairs, grows the
-    band table), and the ACCUMULATED pair set is compared against the
-    all-at-once batch oracle. Because pairs are orientation-normalized,
-    the accumulated set is identical whatever order the batches arrive
-    in — the property the at-least-once ``foreachBatch`` contract
-    needs. This puts the streaming ingest-dedup path itself (not just
-    the batch join math) under a CORRECTNESS row. The micro-batch run
-    is the shared ``_docs_trilogy_fixture`` (one stream, three fold
-    algebras, each into its own state — the dedup fold and its
-    artifacts are identical to a standalone run)."""
-    import os
+    documents land as three parquet files, a ``_replay`` delivers them
+    as separate micro-batches into the incremental-dedup fold (each
+    batch pairs against base + everything ingested before it, appends
+    its pairs, grows the band table), and the ACCUMULATED pair set is
+    compared against the all-at-once batch oracle. Because pairs are
+    orientation-normalized, the accumulated set is identical whatever
+    order the batches arrive in — the property the at-least-once
+    ``foreachBatch`` contract needs. This puts the streaming
+    ingest-dedup path itself (not just the batch join math) under a
+    CORRECTNESS row. The micro-batch run is the shared
+    ``_docs_trilogy_fixture`` (one stream, three fold algebras, each
+    into its own state — the dedup fold and its artifacts are identical
+    to a standalone run)."""
 
     from asritha_metamorphetl_spark.operators.sampling import hash_bucket
 
@@ -766,7 +762,7 @@ def streaming_countmin_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming query, proved equal to sketching the whole corpus at
     once: the base corpus' sketch is seeded as the ``batch_id=-1``
     partial, three delta files arrive as separate micro-batches
-    (``maxFilesPerTrigger=1``), each publishes its partial sketch by
+    (``_replay``), each publishes its partial sketch by
     OVERWRITING its own ``batch_id=<n>`` subdirectory (idempotent under
     foreachBatch's at-least-once retries — a sum, unlike a set, cannot
     tolerate re-append), and the reader folds all partials with one
@@ -777,7 +773,6 @@ def streaming_countmin_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared ``_docs_trilogy_fixture`` (one stream, three fold algebras,
     each into its own state — the Count-Min fold and its partials are
     identical to a standalone run)."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "trilogy")
     return (
@@ -827,7 +822,6 @@ def streaming_weighted_sample_parity(
     shared ``_docs_trilogy_fixture`` (one stream, three fold algebras,
     each into its own state — the top-k fold and its per-batch states
     are identical to a standalone run)."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "trilogy")
     state = spark.read.parquet(os.path.join(root, "esw"))
@@ -865,7 +859,6 @@ def _gram_state_fixture(spark: SparkSession, sf_dir: str) -> str:
     byte-identical to the former inline build; caching it lets the
     parity suite overlap this stream with the five other families —
     VERDICT r11 directive #1). State lands under ``<root>/moments``."""
-    import os
 
     from asritha_metamorphetl_spark.operators.linalg import gram_moments
     from asritha_metamorphetl_spark.operators.sampling import hash_bucket
@@ -890,35 +883,26 @@ def _gram_state_fixture(spark: SparkSession, sf_dir: str) -> str:
         src = os.path.join(root, "delta")
 
         # seed moments + the three delta landings: four independent
-        # write jobs — overlap them (r14, §2.6)
-        def _land(i: int):
-            return lambda: _land_batch(
-                delta.filter(F.col("vec_id") % 3 == i),
-                os.path.join(src, f"batch{i}"),
-                i,
-            )
-
-        _overlap(
+        # write jobs
+        overlap(
+            spark,
             lambda: gram_moments(base, "embedding", EMB_DIM)
             .coalesce(1)
             .write.parquet(os.path.join(state_dir, "batch_id=-1")),
-            *[_land(i) for i in range(3)],
+            *_landings(
+                src, [delta.filter(F.col("vec_id") % 3 == i) for i in range(3)]
+            ),
         )
-
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*/")
+        _replay(
+            spark,
+            src,
+            delta.schema,
+            root,
+            lambda stream: gram_moments_stream(
+                stream, state_dir, "embedding", EMB_DIM
+            ),
+            "gram moments stream",
         )
-        q = (
-            gram_moments_stream(stream, state_dir, "embedding", EMB_DIM)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_SEC):
-            q.stop()
-            raise TimeoutError("gram moments stream did not finish")
 
     return cached_fixture(spark, "stream_gram", sf_dir, build)
 
@@ -929,7 +913,7 @@ def streaming_gram_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     under a REAL streaming query, proved equal to the one-shot batch
     covariance: the base corpus' Gram/sum/count partials are seeded as
     ``batch_id=-1``, three delta files arrive as separate micro-batches
-    (``maxFilesPerTrigger=1``), each publishing its moment partial by
+    (``_replay``), each publishing its moment partial by
     OVERWRITING its own ``batch_id=<n>`` subdirectory (sums cannot
     tolerate re-append under at-least-once retries), and the reader
     folds every partial with one ``groupBy(i, j).sum`` before the SAME
@@ -943,7 +927,6 @@ def streaming_gram_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     are FINITE-VECTOR-gated exactly like the batch covariance twin —
     moment LINEARITY only holds over finite summands (NaN + x loses
     the information a mergeable fold must preserve)."""
-    import os
 
     from asritha_metamorphetl_spark.operators.linalg import (
         covariance_from_moments,
@@ -980,7 +963,6 @@ def _hll_state_fixture(spark: SparkSession, sf_dir: str) -> str:
     session-cached so the concurrent parity suite can overlap it with
     the other five families (fold sequence unchanged). Registers land
     under ``<root>/registers``."""
-    import os
 
     from asritha_metamorphetl_spark.operators.frequent import hll_registers
     from asritha_metamorphetl_spark.session import cached_fixture
@@ -1004,37 +986,27 @@ def _hll_state_fixture(spark: SparkSession, sf_dir: str) -> str:
         src = os.path.join(root, "delta")
 
         # seed registers + the three delta landings are four independent
-        # write jobs into private paths — overlap them (r14, §2.6)
-        def _land(i: int):
-            return lambda: _land_batch(
-                delta.filter(F.col("l_orderkey") % 3 == i),
-                os.path.join(src, f"batch{i}"),
-                i,
-            )
-
-        _overlap(
+        # write jobs into private paths
+        overlap(
+            spark,
             lambda: hll_registers(base, "l_orderkey", ("l_returnflag",))
             .coalesce(1)
             .write.parquet(state_dir),
-            *[_land(i) for i in range(3)],
+            *_landings(
+                src,
+                [delta.filter(F.col("l_orderkey") % 3 == i) for i in range(3)],
+            ),
         )
-
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*/")
-        )
-        q = (
-            hll_registers_stream(
+        _replay(
+            spark,
+            src,
+            delta.schema,
+            root,
+            lambda stream: hll_registers_stream(
                 stream, state_dir, "l_orderkey", ("l_returnflag",)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "hll register stream",
         )
-        if not q.awaitTermination(_AWAIT_SEC):
-            q.stop()
-            raise TimeoutError("hll register stream did not finish")
 
     return cached_fixture(spark, "stream_hll", sf_dir, build)
 
@@ -1045,7 +1017,7 @@ def streaming_hll_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL streaming query, proved register-identical to the one-shot
     batch table: the base corpus' registers are seeded into the state
     directory, three delta files arrive as separate micro-batches
-    (``maxFilesPerTrigger=1``) each APPENDING its own register partial
+    (``_replay``) each APPENDING its own register partial
     (max-merge is idempotent — duplicate delivery is harmless, unlike
     the sum algebras which must overwrite per batch_id), and the reader
     folds every partial with one ``groupBy(flag, bucket).max``. The
@@ -1056,7 +1028,6 @@ def streaming_hll_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets, sums, order statistics, and matrices: idempotent max. The
     micro-batch run is ``_hll_state_fixture`` inside the concurrent
     parity suite; the fold sequence itself is unchanged."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "hll")
     return (
@@ -1097,7 +1068,6 @@ def _mor_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     concurrent parity suite can overlap it with the other families. The
     streamed table lands under ``<root>/tbl``; the consumer only READS
     (aggregates over live rows), so caching is sound."""
-    import os
     import shutil
 
     from asritha_metamorphetl_spark.plans.catalog_queries import (
@@ -1130,36 +1100,24 @@ def _mor_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         src = os.path.join(root, "deletekeys")
         d1 = orders.filter(_MOR_D1).select("o_orderkey").localCheckpoint()
         d2 = orders.filter(_MOR_D2).select("o_orderkey")
-        # one file per batch so maxFilesPerTrigger=1 yields EXACTLY three
+        # one file per batch so the replay yields EXACTLY three
         # micro-batches; batch2 re-delivers batch0's keys verbatim. The
         # FS copy of the base table and the three key-batch writes are
-        # independent — overlap them (r14, §2.6).
-        _overlap(
-            _copy_base,
-            lambda: _land_batch(d1, os.path.join(src, "b0"), 0),
-            lambda: _land_batch(d2, os.path.join(src, "b1"), 1),
-            lambda: _land_batch(d1, os.path.join(src, "b2"), 2),
-        )
+        # independent.
+        overlap(spark, _copy_base, *_landings(src, [d1, d2, d1]))
         t = MergeOnReadTable(
             spark, tbl_root, "o_orderkey", n_files=pristine.n_files
         )
-
-        stream = (
-            spark.readStream.schema("o_orderkey bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*/")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
+        _replay(
+            spark,
+            src,
+            "o_orderkey bigint",
+            root,
+            lambda stream: stream.writeStream.foreachBatch(
                 lambda batch, _eid: t.delete_keys(batch.select("o_orderkey"))
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "MoR delete stream",
         )
-        if not q.awaitTermination(_AWAIT_SEC):
-            q.stop()
-            raise TimeoutError("MoR delete stream did not finish")
 
     return cached_fixture(spark, "stream_mor", sf_dir, build)
 
@@ -1168,19 +1126,18 @@ def _mor_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
 def streaming_mor_delete_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read deletes under a REAL streaming query — the GDPR /
     erasure-pipeline shape at 100 TB: delete-key batches arrive as
-    files, a ``readStream`` with ``maxFilesPerTrigger=1`` delivers them
-    as separate micro-batches, and ``foreachBatch`` folds each into the
-    MoR table as one positional delete file (O(batch) work: a
-    column-pruned base resolve + a tiny write — the base is never
-    rewritten mid-stream). The THIRD batch re-delivers the first —
-    exactly the at-least-once duplicate a restarted sink produces — and
-    must be a no-op because the read-side anti-join dedups positions.
-    The final live state is profiled against the batch predicate
-    oracle, putting the micro-batch delete path itself under a
-    CORRECTNESS row (the batch-side math is ``mor_delete_scan``). The
-    stream run is ``_mor_stream_fixture`` inside the concurrent parity
-    suite; the delete-batch sequence itself is unchanged."""
-    import os
+    files, a ``_replay`` delivers them as separate micro-batches, and
+    ``foreachBatch`` folds each into the MoR table as one positional
+    delete file (O(batch) work: a column-pruned base resolve + a tiny
+    write — the base is never rewritten mid-stream). The THIRD batch
+    re-delivers the first — exactly the at-least-once duplicate a
+    restarted sink produces — and must be a no-op because the read-side
+    anti-join dedups positions. The final live state is profiled against
+    the batch predicate oracle, putting the micro-batch delete path
+    itself under a CORRECTNESS row (the batch-side math is
+    ``mor_delete_scan``). The stream run is ``_mor_stream_fixture``
+    inside the concurrent parity suite; the delete-batch sequence itself
+    is unchanged."""
 
     from asritha_metamorphetl_spark.plans.catalog_queries import MOR_NFILES
     from asritha_metamorphetl_spark.sources.mor import MergeOnReadTable
@@ -1217,7 +1174,6 @@ def _events_lastvalue_fixture(spark: SparkSession, sf_dir: str) -> str:
     computed once instead of twice (the md5-per-row-per-filter cost the
     hll parity already documents). Cached per (session, sf); consumers
     treat the state directories as read-only."""
-    import os
 
     from asritha_metamorphetl_spark.operators.sampling import hash_bucket
     from asritha_metamorphetl_spark.session import cached_fixture
@@ -1264,10 +1220,10 @@ def _events_lastvalue_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
 
         # the two seed writes and three delta landings are five
-        # independent write jobs into private paths — overlap them
-        # (r14, §2.6); both fold sequences below see all their inputs
-        # complete exactly as before
-        _overlap(
+        # independent write jobs into private paths; both fold
+        # sequences below see all their inputs complete
+        overlap(
+            spark,
             lambda: base.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
@@ -1278,31 +1234,21 @@ def _events_lastvalue_fixture(spark: SparkSession, sf_dir: str) -> str:
             .drop("_rn")
             .coalesce(1)
             .write.parquet(os.path.join(rf_state, "batch_id=-1")),
-            lambda: _land_batch(d0, os.path.join(src, "b0"), 0),
-            lambda: _land_batch(d1, os.path.join(src, "b1"), 1),
-            # re-delivery
-            lambda: _land_batch(d0, os.path.join(src, "b2"), 2),
+            # batch2 re-delivers batch0
+            *_landings(src, [d0, d1, d0]),
         )
 
         def run_semiadd_stream() -> None:
-            stream = (
-                spark.readStream.schema(delta.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{src}/*/")
-            )
-            q = (
-                last_value_fold_stream(
+            _replay(
+                spark,
+                src,
+                delta.schema,
+                root,
+                lambda stream: last_value_fold_stream(
                     stream, sa_state, ["user_id", "ym"], ["ts", "event_id"]
-                )
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+                ),
+                "semi-additive fold stream",
             )
-            if not q.awaitTermination(_AWAIT_SEC):
-                q.stop()
-                raise TimeoutError(
-                    "semi-additive fold stream did not finish"
-                )
 
         def run_retry_folds() -> None:
             key_cols = ["user_id"]
@@ -1316,7 +1262,7 @@ def _events_lastvalue_fixture(spark: SparkSession, sf_dir: str) -> str:
         # fold sequence touch DISJOINT state dirs (semiadd/ vs retry/)
         # and each keeps its internal order — overlap the two sequences
         # exactly like the docs trilogy's concurrent per-batch folds
-        _overlap(run_semiadd_stream, run_retry_folds, workers=2)
+        overlap(spark, run_semiadd_stream, run_retry_folds, workers=2)
 
     return cached_fixture(spark, "stream_lastvalue_pair", sf_dir, build)
 
@@ -1347,7 +1293,6 @@ def streaming_semi_additive_parity(
     The build is the shared ``_events_lastvalue_fixture`` (one pinned
     events scan feeds this stream and the retry-fold companion; the
     fold sequence itself is unchanged)."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "lastvalue")
     latest = _latest_state(spark, os.path.join(root, "semiadd"))
@@ -1390,7 +1335,6 @@ def streaming_retry_fold_parity(
     BATCHES are). The build is the shared ``_events_lastvalue_fixture``
     (one pinned events scan feeds both; the duplicated-batch_id fold
     sequence itself is unchanged)."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "lastvalue")
     latest = _latest_state(spark, os.path.join(root, "retry"))
@@ -1602,7 +1546,6 @@ def streaming_late_batch_fold_parity(
     event time, never arrival time, win (fold_last_value_batch; same
     machinery as streaming_semi_additive_parity/retry_fold). The build
     runs as a family of the concurrent parity suite."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "latebatch")
     latest = _latest_state(spark, os.path.join(root, "state"))
@@ -1618,7 +1561,6 @@ def _latebatch_state_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Empty-seed, newest-first tercile folds for the inverted-arrival
     parity, session-cached as a suite family (read-only state under
     ``<root>/state``)."""
-    import os
 
     from asritha_metamorphetl_spark.session import cached_fixture
     from asritha_metamorphetl_spark.streaming.windows import (
@@ -1731,7 +1673,6 @@ def streaming_watermark_drop_parity(
     exact hours while both watermarks carry odd microseconds. The
     stream run is ``_wmdrop_state_fixture`` inside the concurrent
     parity suite."""
-    import os
 
     root = _parity_suite(spark, sf_dir, "wmdrop")
     out = spark.read.parquet(os.path.join(root, "result"))
@@ -1748,7 +1689,6 @@ def _wmdrop_state_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Hostile-order four-batch watermark stream for the drop parity,
     session-cached as a suite family; the append-mode emissions land
     as parquet under ``<root>/result``."""
-    import os
 
     from asritha_metamorphetl_spark.session import cached_fixture
 
@@ -1765,40 +1705,28 @@ def _wmdrop_state_fixture(spark: SparkSession, sf_dir: str) -> str:
             ev.filter(us < c1),   # late arrivals, two triggers behind
             ev.filter(us >= c2),  # the newest data closes the run
         )
-        # four independent single-file writes — overlap them (r14,
-        # §2.6); _land_batch pins each landing's mtime, so the delivery
-        # order is identical however the writes interleave
-        def _land(i: int, b: DataFrame):
-            return lambda: _land_batch(b, os.path.join(src, f"b{i}"), i)
+        # four independent single-file writes; the pinned mtimes keep
+        # the delivery order however the writes interleave
+        overlap(spark, *_landings(src, batches))
 
-        _overlap(*[_land(i, b) for i, b in enumerate(batches)])
-
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*/")
-        )
-        agg = (
-            stream.withWatermark("ts", f"{WMDROP_DELAY_DAYS} days")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n_events",
+        def sink(stream: DataFrame):
+            agg = (
+                stream.withWatermark("ts", f"{WMDROP_DELAY_DAYS} days")
+                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+                .agg(F.count(F.lit(1)).alias("n_events"))
+                .select(
+                    F.col("w.start").alias("window_start"),
+                    "event_type",
+                    "n_events",
+                )
             )
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", os.path.join(root, "result"))
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_SEC):
-            q.stop()
-            raise TimeoutError("watermark drop stream did not finish")
+            return (
+                agg.writeStream.format("parquet")
+                .option("path", os.path.join(root, "result"))
+                .outputMode("append")
+            )
+
+        _replay(spark, src, ev.schema, root, sink, "watermark drop stream")
 
     return cached_fixture(spark, "stream_wmdrop", sf_dir, build)
 

@@ -178,21 +178,46 @@ def get_session() -> SparkSession:
 def scratch_dir(spark: SparkSession, label: str, sf_dir: str) -> str:
     """A session-unique scratch root for a query's on-disk artifacts.
 
-    ``<tmp>/ametl_<label>/<sf_tag>-<applicationId>``: keyed by scale
-    factor so re-runs within one session reuse (and rmtree) the same
-    path, and by ``applicationId`` so two concurrent sessions running
-    the same sf can never clobber each other's artifacts mid-query.
+    ``<tmp>/ametl_<label>/<sf_tag>-<path hash>-<applicationId>``: keyed
+    by the sf directory (its basename for reading, a hash of its
+    absolute path for uniqueness) so re-runs within one session reuse
+    (and rmtree) the same path, and by ``applicationId`` so two
+    concurrent sessions running the same sf can never clobber each
+    other's artifacts mid-query.
     Callers own cleanup (they ``rmtree`` at entry for idempotence).
     """
+    import hashlib
     import os
     import tempfile
 
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    # the basename alone would let /a/sf0.01 and /b/sf0.01 share roots
+    digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     return os.path.join(
         tempfile.gettempdir(),
         f"ametl_{label}",
-        f"{tag}-{spark.sparkContext.applicationId}",
+        f"{tag}-{digest}-{spark.sparkContext.applicationId}",
     )
+
+
+def overlap(spark: SparkSession, *jobs, workers: int = 3) -> list:
+    """Run independent jobs (writes into distinct directories, the
+    independent folds of one micro-batch) on a pool of at most
+    ``workers`` threads and return their results in submission order.
+    The next job's tasks back-fill executors freed by the current job's
+    tail, so the group costs max(job) instead of sum(job). Each job runs
+    under ``inheritable_thread_target(spark)``, so its Spark jobs keep
+    the caller's job group and local properties. The first failing job
+    (in submission order) raises, once every job has finished. Only for
+    jobs with no ordering dependency between them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=min(workers, len(jobs))) as pool:
+        futures = [pool.submit(inherit(job)) for job in jobs]
+        return [future.result() for future in futures]
 
 
 def cached_fixture(spark: SparkSession, label: str, sf_dir: str, build) -> str:

@@ -36,9 +36,12 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from asritha_metamorphetl_spark.session import overlap
 
 
 def _stat_json(v):
@@ -240,11 +243,10 @@ class SnapshotTable:
         self,
         dfs: list[DataFrame],
         stats_cols: list[str] | None = None,
-        max_workers: int = 4,
     ) -> list[int]:
         """Append each frame as its own sequential version, overlapping
         the INDEPENDENT per-commit work (data write + stats scan) across
-        a small thread pool while publishing manifests strictly in
+        a pool of 4 threads while publishing manifests strictly in
         order. The manifest chain is structurally identical to
         ``len(dfs)`` sequential ``commit()`` calls — same dir sequence,
         same cumulative per-file stats, same per-version schema — the
@@ -257,8 +259,6 @@ class SnapshotTable:
         has no sequential equivalent worth preserving. Not safe against
         CONCURRENT external committers (same as commit: the manifest
         rename guard detects, not prevents)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         if not dfs:
             return []
         prior = self.versions()
@@ -270,8 +270,7 @@ class SnapshotTable:
         else:
             dirs, file_stats = [], {}
 
-        def _write_one(i_df):
-            i, df = i_df
+        def _write_one(i: int, df: DataFrame):
             data_dir = (
                 f"{self.root}/data/"
                 f"commit-{base + i:05d}-{uuid.uuid4().hex[:8]}"
@@ -282,8 +281,11 @@ class SnapshotTable:
             )
             return data_dir, stats
 
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            written = list(pool.map(_write_one, enumerate(dfs)))
+        written = overlap(
+            self.spark,
+            *[partial(_write_one, i, df) for i, df in enumerate(dfs)],
+            workers=4,
+        )
 
         versions = []
         for i, (data_dir, stats) in enumerate(written):

@@ -319,47 +319,6 @@ def snapshot_stream(events: DataFrame, raw_path: str, legacy_path: str):
     return events.writeStream.foreachBatch(write_batch)
 
 
-def incremental_dedup_stream(
-    docs: DataFrame,
-    band_dir: str,
-    pairs_dir: str,
-    text_col: str,
-    id_col: str,
-):
-    """Streaming ingest-time dedup: every micro-batch of new documents
-    is banded (MinHash-LSH), joined against the PERSISTED band table of
-    everything ingested so far — never base×base — and the discovered
-    near-dup candidate pairs are appended to ``pairs_dir`` while the
-    batch's own band rows are appended to ``band_dir``, growing the base
-    for the next batch. This is the streaming form of
-    ``operators.dedup.minhash_lsh_pairs_incremental``: per-batch cost is
-    O(batch signatures + collisions), and the corpus-sized quadratic
-    term never recurs.
-
-    Pairs are emitted ORIENTATION-NORMALIZED — (doc_lo, doc_hi) with
-    doc_lo < doc_hi — so the accumulated pair set is independent of the
-    order micro-batches arrive in: a cross-batch pair surfaces when its
-    LATER member arrives, whichever that is. Under Spark's
-    at-least-once ``foreachBatch`` contract a retried batch may append
-    duplicate band/pair rows; both unions are idempotent SETS, so
-    readers take ``distinct()`` (see the parity query) and converge.
-
-    ``band_dir`` must exist (seed it with the base corpus' band rows —
-    at scale this is the bucketed band artifact ``lsh_banded`` names);
-    ``pairs_dir`` must be seeded with an empty frame of the pair schema
-    so the first read never races the first append.
-
-    Returns the DataStreamWriter — caller adds checkpoint/trigger and
-    ``.start()``.
-    """
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_incremental_dedup_batch(
-            batch_df, band_dir, pairs_dir, text_col, id_col
-        )
-
-    return docs.writeStream.foreachBatch(apply_batch)
-
-
 #: Backfill guard for the ingest-dedup fold: batches whose BAND-ROW
 #: count (rows × bands, the frame actually broadcast) stays at or under
 #: this threshold take the broadcast-join + single-file-append fast
@@ -378,14 +337,23 @@ def fold_incremental_dedup_batch(
     text_col: str,
     id_col: str,
 ) -> None:
-    """One ingest-dedup fold step (the ``incremental_dedup_stream``
-    foreachBatch body, factored out so a combined parity run can apply
-    several fold algebras to the same micro-batch): band the batch,
-    pair it against everything persisted so far, append pairs and the
-    batch's own band rows. Batches over ``BROADCAST_MAX_BAND_ROWS``
-    band rows (backfills) use a shuffled join + parallel append instead
-    of the small-batch broadcast + coalesce(1) fast path — same pair
-    algebra, OOM-safe plan."""
+    """One streaming ingest-dedup fold step, a ``foreachBatch`` body:
+    band the batch (MinHash-LSH), pair it against the PERSISTED band
+    table of everything ingested so far — never base×base — and append
+    the pairs and the batch's own band rows, growing the base for the
+    next batch. Per-batch cost is O(batch signatures + collisions); the
+    corpus-sized quadratic term never recurs. Batches over
+    ``BROADCAST_MAX_BAND_ROWS`` band rows (backfills) use a shuffled
+    join + parallel append instead of the small-batch broadcast +
+    coalesce(1) fast path — same pair algebra, OOM-safe plan.
+
+    Pairs are orientation-normalized (doc_lo < doc_hi), so the
+    accumulated pair set is independent of batch arrival order. Under
+    ``foreachBatch``'s at-least-once contract a retried batch may
+    append duplicate band/pair rows; both are SETS, so readers take
+    ``distinct()`` and converge. Seed ``band_dir`` with the base
+    corpus' band rows and ``pairs_dir`` with an empty frame of the pair
+    schema, so the first read never races the first append."""
     from asritha_metamorphetl_spark.operators.dedup import lsh_banded
 
     spark = batch_df.sparkSession
@@ -452,42 +420,6 @@ def fold_incremental_dedup_batch(
         batch_b.write.mode("append").parquet(band_dir)
 
 
-def countmin_stream(
-    docs: DataFrame,
-    sketch_dir: str,
-    text_col: str,
-    depth: int = 3,
-    width: int = 1024,
-    salt: str = "cms:",
-):
-    """Streaming maintenance of a Count-Min sketch: every micro-batch's
-    tokens are sketched (operators/frequent.countmin_sketch) and the
-    partial sketch is published under ``sketch_dir/batch_id=<n>`` —
-    OVERWRITING that batch's own subdirectory, so a retried batch under
-    Spark's at-least-once ``foreachBatch`` contract replaces rather
-    than double-counts its partial (sums, unlike the dedup pair SETS,
-    are not idempotent under re-append; per-batch overwrite makes the
-    fold effectively exactly-once). The sketch is LINEAR — cell-wise
-    sums commute — so readers fold all partials with one
-    ``groupBy(row, cell).sum(n)`` and the result is independent of
-    batch order and batch boundaries: identical to sketching the whole
-    corpus at once. Seed the base corpus' sketch as ``batch_id=-1``.
-
-    Per-batch cost is one bounded aggregate (≤ depth·width rows out);
-    reader cost is O(populated cells · batches) — the state the stream
-    carries never touches the raw token stream again.
-
-    Returns the DataStreamWriter — caller adds checkpoint/trigger and
-    ``.start()``.
-    """
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_countmin_batch(
-            batch_df, batch_id, sketch_dir, text_col, depth, width, salt
-        )
-
-    return docs.writeStream.foreachBatch(apply_batch)
-
-
 def fold_countmin_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -497,10 +429,14 @@ def fold_countmin_batch(
     width: int,
     salt: str,
 ) -> None:
-    """One Count-Min fold step (the ``countmin_stream`` foreachBatch
-    body, factored out for the combined parity run): sketch the batch's
-    tokens and publish the partial by overwriting its own batch_id
-    subdirectory."""
+    """One Count-Min fold step, a ``foreachBatch`` body: sketch the
+    batch's tokens and publish the partial under
+    ``sketch_dir/batch_id=<n>``, OVERWRITING that subdirectory, so a
+    retried batch replaces rather than double-counts its partial (a
+    sum, unlike the dedup pair SET, is not idempotent under re-append).
+    The sketch is linear, so readers fold every partial with one
+    ``groupBy(row, cell).sum(n)`` whatever the batch order and
+    boundaries. Seed the base corpus' sketch as ``batch_id=-1``."""
     from asritha_metamorphetl_spark.operators.frequent import countmin_sketch
 
     toks = batch_df.select(
@@ -513,43 +449,6 @@ def fold_countmin_batch(
     )
 
 
-def weighted_topk_stream(
-    docs: DataFrame,
-    state_dir: str,
-    weight_fn,
-    id_col: str,
-    k: int,
-    salt: str = "es:",
-):
-    """Streaming maintenance of an Efraimidis–Spirakis weighted sample:
-    order statistics over FIXED per-row keys are mergeable —
-    topk(A ∪ B) = topk(topk(A) ∪ B) — so each micro-batch folds the
-    persisted k-best with its own keyed rows and republishes the
-    k-best of the union. The state after batch n lands at
-    ``state_dir/batch_id=<n>`` (overwriting, like the Count-Min fold);
-    a RETRIED batch folds from the newest state with
-    ``batch_id < n`` — NEVER its own prior attempt — so the lazy read
-    can't race the ``overwrite`` that deletes ``batch_id=<n>`` before
-    the write job executes (read-your-own-overwrite is the classic
-    foreachBatch retry bug), and the recomputation is bit-identical
-    because the fold is idempotent. Readers take the state with
-    the highest batch_id; after all batches it equals the one-shot
-    batch sample over the full corpus exactly (the parity query pins
-    this under the oracle hash).
-
-    ``weight_fn(df) -> df'`` must add the sample's weight column
-    ``w`` (> 0) to a batch frame — row-local, so per-batch cost is
-    O(batch) + the O(k) fold. Seed the base corpus' top-k as
-    ``batch_id=-1``.
-    """
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_weighted_sample_batch(
-            batch_df, batch_id, state_dir, weight_fn, id_col, k, salt
-        )
-
-    return docs.writeStream.foreachBatch(apply_batch)
-
-
 def fold_weighted_sample_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -559,9 +458,16 @@ def fold_weighted_sample_batch(
     k: int,
     salt: str = "es:",
 ) -> None:
-    """One micro-batch of the weighted-sample fold, module-level so a
-    RETRY (same batch_id delivered twice — foreachBatch's at-least-once
-    contract) is directly testable without driving a stream restart."""
+    """One micro-batch of the Efraimidis–Spirakis weighted-sample fold,
+    a ``foreachBatch`` body: order statistics over fixed per-row keys
+    are mergeable — topk(A ∪ B) = topk(topk(A) ∪ B) — so the batch's
+    keyed rows fold with the persisted k-best and the k-best of the
+    union OVERWRITES ``state_dir/batch_id=<n>``. A RETRY (same batch_id
+    delivered twice) folds from the newest state strictly older than
+    ``n``, never its own prior attempt, so it recomputes the identical
+    state. Readers take the highest batch_id. ``weight_fn(df)`` adds
+    the row-local weight column ``w`` (> 0); seed the base corpus'
+    top-k as ``batch_id=-1``."""
     from asritha_metamorphetl_spark.operators.sampling import (
         weighted_sample_without_replacement,
     )

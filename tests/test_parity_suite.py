@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import threading
+import time
 from importlib import import_module
 
 import pytest
@@ -375,10 +376,10 @@ def test_concurrent_first_touches_build_each_family_once(
 
 def test_stream_fixture_landings_are_mtime_pinned_in_batch_order(spark):
     """FileStreamSource delivers files in modification-time order, and
-    the fixtures land their batches concurrently (``_overlap``). Each
-    landing's directory and files carry the per-index pinned mtime
-    (``1000 * (index + 1)`` seconds), so the micro-batch order is the
-    batch index, not the commit race."""
+    the fixtures land their batches concurrently (``_landings`` through
+    ``session.overlap``). Each landing's directory and files carry the
+    per-index pinned mtime (``1000 * (index + 1)`` seconds), so the
+    micro-batch order is the batch index, not the commit race."""
     import asritha_metamorphetl_spark.plans.streaming_queries as SQ
     from tests.conftest import SF_SMOKE
 
@@ -389,3 +390,185 @@ def test_stream_fixture_landings_are_mtime_pinned_in_batch_order(spark):
         assert any(p.endswith(".parquet") for p in paths)
         for p in paths:
             assert os.stat(p).st_mtime == 1000 * (i + 1), p
+
+
+def test_overlap_returns_results_in_submission_order(spark):
+    from asritha_metamorphetl_spark.session import overlap
+
+    def job(value, delay):
+        def run():
+            time.sleep(delay)
+            return value
+
+        return run
+
+    assert overlap(spark, job("a", 0.3), job("b", 0.0), job("c", 0.1)) == [
+        "a",
+        "b",
+        "c",
+    ]
+
+
+def test_overlap_raises_only_after_siblings_finish(spark):
+    """A failing job does not abandon its siblings mid-write: the error
+    surfaces once every job of the group has finished."""
+    from asritha_metamorphetl_spark.session import overlap
+
+    finished = []
+
+    def boom():
+        raise ValueError("boom")
+
+    def slow():
+        time.sleep(0.5)
+        finished.append("slow")
+
+    with pytest.raises(ValueError, match="boom"):
+        overlap(spark, boom, slow, workers=2)
+    assert finished == ["slow"]
+
+
+def test_overlap_jobs_land_in_the_callers_job_group(spark, tmp_path):
+    """The pool threads inherit the caller's local properties, so the
+    writes are attributed to the caller's job group (Pipeline's node
+    name in a DAG run)."""
+    from asritha_metamorphetl_spark.session import overlap
+
+    sc = spark.sparkContext
+    group = "overlap_test_caller"
+    sc.setJobGroup(group, "caller")
+    try:
+        overlap(
+            spark,
+            lambda: spark.range(10).write.parquet(str(tmp_path / "a")),
+            lambda: spark.range(10).write.parquet(str(tmp_path / "b")),
+            workers=2,
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sorted(os.listdir(tmp_path)) == ["a", "b"]
+    # job records reach the status store asynchronously
+    deadline = time.monotonic() + 30
+    while (
+        len(sc.statusTracker().getJobIdsForGroup(group)) < 2
+        and time.monotonic() < deadline
+    ):
+        time.sleep(0.1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
+def test_await_times_out_and_stops_the_stream(spark, monkeypatch):
+    """A bounded stream that outlives ``_AWAIT_SEC`` raises rather than
+    letting a consumer read a partial sink, and is stopped."""
+    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
+
+    monkeypatch.setattr(SQ, "_AWAIT_SEC", 0.05)
+    query = (
+        spark.readStream.format("rate").load().writeStream.format("noop").start()
+    )
+    with pytest.raises(TimeoutError):
+        SQ._await(query, "never-ending rate stream")
+    assert spark.streams.active == []
+
+
+def test_materialize_leaves_the_session_partitions_while_it_runs(
+    spark, tmp_path
+):
+    """``_materialize``'s partition pin holds for its own stream only:
+    while that stream runs, the caller's session already reads its own
+    value again, so a concurrent query (and a concurrent
+    ``_materialize``'s restore) never sees the pinned one."""
+    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    src, gate = str(tmp_path / "src"), str(tmp_path / "gate")
+    spark.range(4).write.parquet(src)
+
+    @F.udf("long")
+    def wait_for_gate(x):
+        import os
+        import time
+
+        deadline = time.time() + 120
+        while not os.path.exists(gate) and time.time() < deadline:
+            time.sleep(0.05)
+        return x
+
+    stream = (
+        spark.readStream.schema("id long")
+        .parquet(src)
+        .select(wait_for_gate("id").alias("id"))
+        .groupBy("id")
+        .count()
+    )
+    out = {}
+    runner = threading.Thread(
+        target=lambda: out.update(
+            rows=SQ._materialize(stream, state_partitions=3).collect()
+        )
+    )
+    runner.start()
+    try:
+        deadline = time.monotonic() + 60
+        while not spark.streams.active and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert spark.streams.active, "the stream never started"
+        while spark.conf.get(key) != own and time.monotonic() < deadline:
+            time.sleep(0.05)
+        seen, running = spark.conf.get(key), bool(spark.streams.active)
+    finally:
+        open(gate, "w").close()
+        runner.join(timeout=120)
+    assert running, "the stream finished before the gate opened"
+    assert seen == own
+    assert sorted((r["id"], r["count"]) for r in out["rows"]) == [
+        (i, 1) for i in range(4)
+    ]
+
+
+def test_concurrent_materialize_calls_restore_the_session_value(
+    spark, tmp_path
+):
+    """More overlapping ``_materialize`` calls than cores, each pinning
+    its own partition count: every result is right and no call restores
+    another's pinned value, so the session reads its own value after."""
+    import sys
+
+    import asritha_metamorphetl_spark.plans.streaming_queries as SQ
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    src = str(tmp_path / "src")
+    spark.range(12).write.parquet(src)
+    pins = (2, 3, 5, 6, 7)
+    got, errors = {}, []
+
+    def run(n):
+        try:
+            stream = (
+                spark.readStream.schema("id long")
+                .parquet(src)
+                .groupBy((F.col("id") % n).alias("k"))
+                .count()
+            )
+            got[n] = SQ._materialize(stream, state_partitions=n).count()
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in pins]
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=180)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == {n: n for n in pins}
+    assert spark.conf.get(key) == own

@@ -252,6 +252,14 @@ def test_build_session_shares_scratch_roots(spark):
         scratch_dir(spark, "probe", "/x/sf9.7")
         == scratch_dir(other, "probe", "/x/sf9.7")
     )
+    # roots key on the whole sf path, not its basename: two catalogs
+    # named alike in one session never share a fixture
+    assert scratch_dir(spark, "probe", "/a/sf0.01") != scratch_dir(
+        spark, "probe", "/b/sf0.01"
+    )
+    assert scratch_dir(spark, "probe", "/a/sf0.01/") == scratch_dir(
+        spark, "probe", "/a/sf0.01"
+    )
     # and the conf isolation the suite relies on
     other.conf.set("spark.sql.shuffle.partitions", "3")
     assert spark.conf.get("spark.sql.shuffle.partitions") != "3"

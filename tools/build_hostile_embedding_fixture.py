@@ -49,16 +49,12 @@ Defaults: /root/testdata/sf0.01 -> /tmp/ametl_hostile_embedding/<sf_tag>
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tools.catalog_rewrite import derive_catalog, main  # noqa: E402
 
 #: Modulo base for the hostile classes (29 → each class ≈ 3.4% of
 #: vectors, ~24% of the corpus hostile overall across seven classes).
@@ -66,14 +62,9 @@ MOD = 29
 
 
 def build(src: str, out: str) -> str:
-    """Single-file parquet rewrites via DuckDB (driver testdata layout
-    is one file per table; the oracle-side read_parquet needs files).
-    Element type stays float32 (REAL) so the hostile file's schema is
-    byte-compatible with the source catalog's."""
-    import duckdb
-
-    con = duckdb.connect()
-    os.makedirs(out, exist_ok=True)
+    """Derive the catalog at ``out`` with ``embeddings.embedding``
+    rewritten. Element type stays float32 (REAL) so the hostile file's
+    schema is byte-compatible with the source catalog's."""
     emb_case = f"""
         CASE vec_id % {MOD}
             WHEN 0 THEN CAST(list_transform(embedding,
@@ -98,31 +89,8 @@ def build(src: str, out: str) -> str:
             SELECT * REPLACE ({emb_case} AS embedding)
             FROM read_parquet('{{src}}')""",
     }
-    for t in TABLES:
-        sp = os.path.join(src, f"{t}.parquet")
-        dp = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(sp):
-            continue
-        if t in rewrites:
-            sql = rewrites[t].format(src=sp)
-            con.execute(f"COPY ({sql}) TO '{dp}' (FORMAT PARQUET)")
-        else:
-            shutil.copy2(sp, dp)
-    return out
-
-
-def main() -> int:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    tag = os.path.basename(os.path.normpath(src))
-    out = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else os.path.join("/tmp/ametl_hostile_embedding", tag)
-    )
-    build(src, out)
-    print(out)
-    return 0
+    return derive_catalog(src, out, rewrites)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(build, "/tmp/ametl_hostile_embedding"))

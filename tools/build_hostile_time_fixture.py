@@ -36,16 +36,12 @@ Defaults: /root/testdata/sf0.01 -> /tmp/ametl_hostile_time/<sf_tag>
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tools.catalog_rewrite import derive_catalog, main  # noqa: E402
 
 #: Days the late class is shifted back.
 LATE_DAYS = 7
@@ -54,12 +50,7 @@ TIE_MOD = 5
 
 
 def build(src: str, out: str) -> str:
-    """Single-file parquet rewrites via DuckDB (driver testdata layout is
-    one file per table; the oracle-side read_parquet needs files)."""
-    import duckdb
-
-    con = duckdb.connect()
-    os.makedirs(out, exist_ok=True)
+    """Derive the catalog at ``out`` with ``events.ts`` rewritten."""
     ts_expr = f"""
         CASE WHEN event_id % {TIE_MOD} = 3
              THEN date_trunc('day',
@@ -73,31 +64,8 @@ def build(src: str, out: str) -> str:
             SELECT * REPLACE ({ts_expr} AS ts)
             FROM read_parquet('{{src}}')""",
     }
-    for t in TABLES:
-        sp = os.path.join(src, f"{t}.parquet")
-        dp = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(sp):
-            continue
-        if t in rewrites:
-            sql = rewrites[t].format(src=sp)
-            con.execute(f"COPY ({sql}) TO '{dp}' (FORMAT PARQUET)")
-        else:
-            shutil.copy2(sp, dp)
-    return out
-
-
-def main() -> int:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    tag = os.path.basename(os.path.normpath(src))
-    out = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else os.path.join("/tmp/ametl_hostile_time", tag)
-    )
-    build(src, out)
-    print(out)
-    return 0
+    return derive_catalog(src, out, rewrites)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(build, "/tmp/ametl_hostile_time"))

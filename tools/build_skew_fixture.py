@@ -33,16 +33,12 @@ Defaults: /root/testdata/sf0.01 -> /tmp/ametl_skew/<sf_tag>
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tools.catalog_rewrite import derive_catalog, main  # noqa: E402
 
 #: 1-in-N row remapped to the hot entity (N=5 → 20%).
 HOT_MOD = 5
@@ -55,13 +51,8 @@ MEGA_ORDER = 7
 
 
 def build(src: str, out: str) -> str:
-    """Single-file parquet rewrites via DuckDB (the driver's testdata
-    layout is one file per table; Spark writes directories, which the
-    oracle-side ``read_parquet('<path>')`` cannot open)."""
-    import duckdb
-
-    con = duckdb.connect()
-    os.makedirs(out, exist_ok=True)
+    """Derive the catalog at ``out`` with events, orders and lineitem
+    rewritten."""
     rewrites = {
         "events": f"""
             SELECT * REPLACE (
@@ -82,31 +73,8 @@ def build(src: str, out: str) -> str:
                      ELSE l_orderkey END AS l_orderkey)
             FROM read_parquet('{{src}}')""",
     }
-    for t in TABLES:
-        sp = os.path.join(src, f"{t}.parquet")
-        dp = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(sp):
-            continue
-        if t in rewrites:
-            sql = rewrites[t].format(src=sp)
-            con.execute(f"COPY ({sql}) TO '{dp}' (FORMAT PARQUET)")
-        else:
-            shutil.copy2(sp, dp)
-    return out
-
-
-def main() -> int:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    tag = os.path.basename(os.path.normpath(src))
-    out = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else os.path.join("/tmp/ametl_skew", tag)
-    )
-    build(src, out)
-    print(out)
-    return 0
+    return derive_catalog(src, out, rewrites)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(build, "/tmp/ametl_skew"))
